@@ -14,6 +14,7 @@ from yaetl_spark import (
     ParquetSource,
     Pipeline,
     PipelineError,
+    Predicate,
     Rename,
     Replace,
     StopWhen,
@@ -744,3 +745,55 @@ def test_branch_only_counters_report_stages_not_totals(spark):
     )
     assert report["stage_records"] == {"b0_qualify_0": 3}
     assert "records" not in report
+
+
+def test_branch_reject_to_is_root_only(spark):
+    """Reject capture needs the rooted flow; a branch says so instead of
+    failing on an unknown keyword."""
+    with pytest.raises(PipelineError, match="root-only"):
+        BranchPipeline(spark).qualify("id < 3", reject_to=CollectSink())
+
+
+@pytest.mark.parametrize("form", ["sql", "column", "callable", "predicate"])
+def test_root_and_branch_share_one_grammar(spark, form):
+    """The same qualify -> transform -> join -> limit chain gives the same
+    rows and the same per-stage record counts whether it is composed on
+    the root flow or as a branch over it."""
+    condition = {
+        "sql": "id % 3 <> 0",
+        "column": F.col("id") % 3 != 0,
+        "callable": lambda df: df["id"] % 3 != 0,
+        "predicate": Predicate("id % 3 <> 0"),
+    }[form]
+    src = MemorySource([(i, i % 4) for i in range(60)], "id long, k long")
+    dim = MemorySource([(0, "zero"), (1, "one"), (2, "two")], "k long, name string")
+
+    def chain(p):
+        return (
+            p.qualify(condition)                     # 60 -> 40
+            .transform(Rename({"id": "row_id"}))
+            .join(dim, "k", broadcast=True)          # k = 3 has no match
+            .limit(100)
+        )
+
+    root_sink, branch_sink = CollectSink(), CollectSink()
+    root = chain(Pipeline(spark, count_stages=True).from_(src)).to(root_sink).run()
+    branched = (
+        Pipeline(spark, count_stages=True)
+        .from_(src)
+        .branch(chain(BranchPipeline(spark, count_stages=True)).to(branch_sink))
+        .run()
+    )
+
+    def by_kind(report):
+        # root names stages <kind>_<i>, branch stages b<j>_<kind>_<i>
+        return {
+            name.split("_")[-2]: n for name, n in report["stage_records"].items()
+        }
+
+    rows = sorted(r.asDict().items() for r in root_sink.rows)
+    assert rows == sorted(r.asDict().items() for r in branch_sink.rows)
+    assert len(rows) == 30
+    assert by_kind(root) == by_kind(branched) == {
+        "extract": 60, "qualify": 40, "transform": 40, "join": 30, "load": 30,
+    }

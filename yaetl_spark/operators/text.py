@@ -269,9 +269,7 @@ def rolling_fingerprint(
 
     # bind the normalized string once: referencing the regexp_replace
     # inline would re-run it for every character position
-    return let_once(
-        F.lower(F.trim(F.regexp_replace(text, r"\s+", " "))), fold
-    )
+    return let_once(normalize_ws_case(text), fold)
 
 
 def bpe_token_count(text: Column, pattern: str = r"[^a-z0-9]+") -> Column:
@@ -689,9 +687,7 @@ def char_ngrams(text: Column, n: int = 5) -> Column:
         )
 
     # bind the normalized string once (else the regexp re-runs per gram)
-    return let_once(
-        F.lower(F.trim(F.regexp_replace(text, r"\s+", " "))), grams
-    )
+    return let_once(normalize_ws_case(text), grams)
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -109,7 +109,6 @@ class Pipeline:
             "num_to": 0,
             "num_branch": 0,
         }
-        self._parent_df: DataFrame | None = None  # set on branches at run time
         # a StopWhen qualifier marks the flow break-truncated: sinks then
         # flush 'dirty', the reference's "one node broke the flow" status
         # (LoaderAbstract.php:61-87, docs/callbacks.md:27-48)
@@ -122,17 +121,48 @@ class Pipeline:
         # written + flushed alongside the regular sink chains at run()
         self._reject_chains: list[tuple[DataFrame, Sink]] = []
 
+    # Deferred-op list: None on a rooted flow, where every grammar step is
+    # applied as it is composed; BranchPipeline sets it to a list.
+    _ops: list[Callable[[DataFrame], DataFrame]] | None = None
+
     # -- grammar --------------------------------------------------------------
-    def _observe_stage(self, kind: str) -> None:
-        """With count_stages on, count the records leaving the stage just
-        composed — a CollectMetrics node evaluated during the write pass
-        (never a separate job)."""
-        if not self._count_stages or self._df is None:
-            return
-        name = f"{kind}_{len(self._stage_obs)}"
-        obs = Observation(f"_stage_{name}")
-        self._df = self._df.observe(obs, F.count(F.lit(1)).alias("n"))
-        self._stage_obs.append((name, kind, obs))
+    def _push(self, op: Callable[[DataFrame], DataFrame],
+              stage: str | None = None) -> "Pipeline":
+        """Land one grammar step: a rooted flow applies ``op`` now, a branch
+        defers it to run() (:meth:`_apply_to`). ``stage`` names the node
+        counter to bump and, with count_stages on, the record counter."""
+        if self._ops is None:
+            self._df = op(self._require_df())
+        else:
+            self._ops.append(op)
+        if stage is not None:
+            self._counters[f"num_{stage}"] += 1
+            if self._count_stages:
+                self._push(self._stage_counter(stage))
+        return self
+
+    @property
+    def _obs_tag(self) -> str:  # names stay unique once grafted onto the root plan
+        return "" if self._ops is None else f"br_{id(self)}_"
+
+    def _stage_counter(self, kind: str,
+                       into: list | None = None) -> Callable[[DataFrame], DataFrame]:
+        """Record counter for one stage, registered in ``into`` (default:
+        the stage list) now so its report name is stable; the returned op
+        attaches it — a CollectMetrics node evaluated during the write."""
+        into = self._stage_obs if into is None else into
+        name = f"{kind}_{len(into)}"
+        obs = Observation(f"_stage_{self._obs_tag}{name}")
+        into.append((name, kind, obs))
+
+        def op(df: DataFrame) -> DataFrame:
+            return df.observe(obs, F.count(F.lit(1)).alias("n"))
+
+        # marker lets the root-break trigger replay skip this op: an
+        # Observation attaches once, and the eager trigger job must not
+        # consume (or mis-capture) the branch's stage counters
+        op._stage_obs = True  # type: ignore[attr-defined]
+        return op
 
     def _require_df(self) -> DataFrame:
         if self._df is None:
@@ -162,10 +192,7 @@ class Pipeline:
             # num_extract counts per-extractor records (the reference's
             # per-extractor semantics, YaEtl.php:38-53) — observing after
             # a union/crossJoin would double-count the upstream stream
-            name = f"extract_{len(self._stage_obs)}"
-            obs = Observation(f"_stage_{name}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-            self._stage_obs.append((name, "extract", obs))
+            df = self._stage_counter("extract")(df)
         if self._df is None:
             self._df = df
         elif aggregate_with:
@@ -216,72 +243,84 @@ class Pipeline:
         reject stream re-runs the upstream lineage up to this stage
         (same cost model as a branch over an unpersisted mid-chain
         frame); rejects captured here do not see a run-time
-        root-targeted break's truncation.
+        root-targeted break's truncation. Reject capture is root-only: a
+        branch ``qualify(..., reject_to=...)`` raises.
         """
         from .operators.qualifiers import BreakAt, StopWhen
 
-        df = self._require_df()
-        self._counters["num_qualify"] += 1
+        # Predicate, callable, Column and SQL string all reduce to a
+        # per-frame Column; any other Qualifier applies itself
+        opaque = isinstance(condition, Qualifier) and not isinstance(
+            condition, Predicate)
         if reject_to is not None:
+            if self._ops is not None:
+                raise PipelineError(
+                    "reject_to is root-only: a branch cannot capture rejects")
             if isinstance(condition, (StopWhen, BreakAt)):
                 raise PipelineError(
                     "reject_to only applies to row-wise keep/skip "
                     "conditions; StopWhen/BreakAt truncate the flow "
                     "instead of rejecting individual rows"
                 )
-            if isinstance(condition, Predicate):
-                raw = condition.condition
-                cond = F.expr(raw) if isinstance(raw, str) else raw
-            elif isinstance(condition, Qualifier):
+            if opaque:
                 raise PipelineError(
                     "reject_to needs a condition-expressible qualifier "
                     "(Column / SQL string / callable / Predicate) — "
                     f"{type(condition).__name__} does not expose a "
                     "negatable condition"
                 )
-            elif callable(condition) and not isinstance(condition, Column):
-                cond = condition(df)
-            else:
-                cond = F.expr(condition) if isinstance(condition, str) else condition
-            # filter(cond) keeps TRUE rows; the complement (FALSE or
-            # NULL) is exactly what this captures
-            self._reject_chains.append(
-                (df.filter(~cond | cond.isNull()), reject_to)
-            )
-            self._df = df.filter(cond)
-            self._observe_stage("qualify")
-            return self
         if isinstance(condition, StopWhen):
             self._dirty = True
-            self._df = condition.apply(df)
+            op = condition.apply
+        elif isinstance(condition, BreakAt) and (
+            condition.target == "root" and self._ops is not None
+        ):
+            # recorded for run(): the cut is computed over this branch's
+            # lineage up to here, then truncates the shared flow. No local
+            # op (that truncation covers this branch), so nothing to count.
+            self._counters["num_qualify"] += 1
+            self._root_breaks.append((len(self._ops), condition))
+            return self
         elif isinstance(condition, BreakAt):
-            # dirty only if the break actually fires: count trigger rows via
-            # a free observation on the pre-truncation frame (all pre rows
-            # flow through it — the cut join's probe side)
-            obs = Observation(f"_break_{len(self._break_obs)}")
-            pre = df.observe(
-                obs, F.count(F.when(condition._cond(), 1)).alias("n_trig")
-            )
-            self._break_obs.append(obs)
-            self._df = condition.apply(pre)
-        elif isinstance(condition, Qualifier):
-            self._df = condition.apply(df)
-        elif callable(condition) and not isinstance(condition, Column):
-            self._df = df.filter(condition(df))
+
+            def op(df: DataFrame) -> DataFrame:
+                # dirty only if the break actually fires: count trigger
+                # rows via a free observation on the pre-truncation frame
+                # (all pre rows flow through it — the cut join's probe
+                # side). Created per application: a branch replays its ops
+                # on every run, and an Observation attaches once.
+                obs = Observation(
+                    f"_break_{self._obs_tag}{len(self._break_obs)}")
+                self._break_obs.append(obs)
+                pre = df.observe(
+                    obs, F.count(F.when(condition._cond(), 1)).alias("n_trig")
+                )
+                return condition.apply(pre)
+
+        elif opaque:
+            op = condition.apply
         else:
-            self._df = Predicate(condition).apply(df)
-        self._observe_stage("qualify")
-        return self
+            raw = condition.condition if isinstance(condition, Predicate) else condition
+
+            def op(df: DataFrame) -> DataFrame:
+                if callable(raw) and not isinstance(raw, Column):
+                    cond = raw(df)
+                else:
+                    cond = F.expr(raw) if isinstance(raw, str) else raw
+                if reject_to is not None:
+                    # filter(cond) keeps TRUE rows; the complement (FALSE
+                    # or NULL) is exactly what this captures
+                    self._reject_chains.append(
+                        (df.filter(~cond | cond.isNull()), reject_to))
+                return df.filter(cond)
+
+        return self._push(op, "qualify")
 
     def transform(
         self, transformer: Transformer | Callable[[DataFrame], DataFrame]
     ) -> "Pipeline":
-        df = self._require_df()
-        self._counters["num_transform"] += 1
         t = transformer if isinstance(transformer, Transformer) else Apply(transformer)
-        self._df = t.apply(df)
-        self._observe_stage("transform")
-        return self
+        return self._push(t.apply, "transform")
 
     def join(
         self,
@@ -290,12 +329,12 @@ class Pipeline:
         how: str = "inner",
         broadcast: bool = False,
     ) -> "Pipeline":
-        df = self._require_df()
-        self._counters["num_join"] += 1
-        right = self._coerce_source(source)
-        self._df = _join(df, right, on, how=how, broadcast=broadcast)
-        self._observe_stage("join")
-        return self
+        def op(df: DataFrame) -> DataFrame:
+            # a branch reads its join source when run() replays the op
+            right = self._coerce_source(source)
+            return _join(df, right, on, how=how, broadcast=broadcast)
+
+        return self._push(op, "join")
 
     def left_join(self, source, on, default_record=None, **kw) -> "Pipeline":
         clause = (
@@ -306,15 +345,14 @@ class Pipeline:
         return self.join(source, clause, how="left", **kw)
 
     def limit(self, n: int) -> "Pipeline":
-        self._df = self._require_df().limit(n)
-        return self
+        return self._push(lambda df: df.limit(n))
 
     def offset(self, n: int) -> "Pipeline":
-        self._df = self._require_df().offset(n)
-        return self
+        return self._push(lambda df: df.offset(n))
 
     def to(self, sink: Sink) -> "Pipeline":
-        self._require_df()
+        if self._ops is None:
+            self._require_df()
         self._counters["num_to"] += 1
         self._sinks.append(sink)
         return self
@@ -341,7 +379,6 @@ class Pipeline:
 
     def run(
         self,
-        count_records: bool = True,
         on_event: Callable[[str, dict], None] | None = None,
         progress_interval: float | None = None,
         scale_gate: bool | dict[str, Any] | None = None,
@@ -404,7 +441,7 @@ class Pipeline:
                 trig_df = df
                 for op in (child._ops or [])[:prefix_len]:
                     if getattr(op, "_stage_obs", False):
-                        continue  # see _observe_stage_op: attach-once
+                        continue  # see _stage_counter: attach-once
                     trig_df = op(trig_df)
                 cut_value = brk.cut(trig_df)
                 if cut_value is not None:
@@ -432,10 +469,8 @@ class Pipeline:
             emit, progress_interval) if (
             on_event is not None and progress_interval) else None
         # record-count observation on the final frame, free during the write
-        obs: Observation | None = None
-        if count_records:
-            obs = Observation("_pipeline")
-            df = df.observe(obs, F.count(F.lit(1)).alias("num_records"))
+        obs = Observation("_pipeline")
+        df = df.observe(obs, F.count(F.lit(1)).alias("num_records"))
 
         # sink chains: the root's sinks run in declared order over the root
         # frame, each branch's over its own lineage; within a chain a
@@ -492,11 +527,7 @@ class Pipeline:
                     # reject sinks stay out of num_load — their row count
                     # is already reported as num_rejected
                     if self._count_stages and not is_reject:
-                        lname = f"load_{len(load_obs)}"
-                        lo = Observation(f"_stage_{lname}")
-                        cur = cur.observe(
-                            lo, F.count(F.lit(1)).alias("n"))
-                        load_obs.append((lname, "load", lo))
+                        cur = self._stage_counter("load", load_obs)(cur)
                     ret = sink.write(cur)
                     if sink.returning and ret is not None:
                         cur = ret
@@ -530,8 +561,7 @@ class Pipeline:
             "duration_sec": round(time.monotonic() - t0, 3),
             **self._counters,
         }
-        if obs is not None:
-            report["num_records"] = obs.get.get("num_records")
+        report["num_records"] = obs.get.get("num_records")
         if reject_obs:
             report["num_rejected"] = sum(
                 o.get.get("n") or 0 for o in reject_obs
@@ -624,16 +654,15 @@ class Pipeline:
             df = op(df)
         return df
 
-    # Deferred-op list; only BranchPipeline populates it.
-    _ops: list[Callable[[DataFrame], DataFrame]] | None = None
-
     def collect(self) -> list:
         return self._require_df().collect()
 
 
 class BranchPipeline(Pipeline):
-    """Sourceless pipeline whose grammar records deferred ops; used with
-    ``parent.branch(child)`` for fan-out over a shared cached upstream."""
+    """Sourceless pipeline for ``parent.branch(child)`` fan-out over a
+    shared persisted upstream: the same grammar as :class:`Pipeline` minus
+    ``from_``/``observe``/``reject_to``, each step deferred as an op that
+    the parent's run() replays onto that upstream."""
 
     def __init__(
         self,
@@ -652,88 +681,5 @@ class BranchPipeline(Pipeline):
     def _require_df(self) -> DataFrame:  # grammar guard not applicable
         raise PipelineError("BranchPipeline composes lazily; no df until run")
 
-    def _observe_stage_op(self, kind: str) -> None:
-        """Deferred-op twin of :meth:`Pipeline._observe_stage`: the
-        Observation is created now (stable report name), attached when
-        the op list is replayed onto the shared upstream at run()."""
-        if not self._count_stages:
-            return
-        name = f"{kind}_{len(self._stage_obs)}"
-        obs = Observation(f"_stage_br_{id(self)}_{name}")
-        self._stage_obs.append((name, kind, obs))
-
-        def op(df: DataFrame, _o=obs) -> DataFrame:
-            return df.observe(_o, F.count(F.lit(1)).alias("n"))
-
-        # marker lets the root-break trigger replay skip this op: an
-        # Observation attaches once, and the eager trigger job must not
-        # consume (or mis-capture) the branch's stage counters
-        op._stage_obs = True  # type: ignore[attr-defined]
-        self._ops.append(op)
-
     def from_(self, *a, **kw):
         raise PipelineError("branch pipelines must not call from_()")
-
-    def qualify(self, condition) -> "BranchPipeline":
-        from .operators.qualifiers import BreakAt, StopWhen
-
-        self._counters["num_qualify"] += 1
-        if isinstance(condition, StopWhen):
-            self._dirty = True
-            self._ops.append(condition.apply)
-        elif isinstance(condition, BreakAt) and condition.target == "root":
-            # recorded for Pipeline.run(): the cut is computed over this
-            # branch's lineage up to here, then truncates the shared flow.
-            # No local op — the root truncation already covers this branch.
-            self._root_breaks.append((len(self._ops), condition))
-        elif isinstance(condition, BreakAt):
-
-            def op(df: DataFrame, _brk=condition) -> DataFrame:
-                obs = Observation(f"_br_break_{id(_brk)}")
-                self._break_obs.append(obs)
-                pre = df.observe(
-                    obs, F.count(F.when(_brk._cond(), 1)).alias("n_trig")
-                )
-                return _brk.apply(pre)
-
-            self._ops.append(op)
-        elif isinstance(condition, Qualifier):
-            self._ops.append(condition.apply)
-        elif callable(condition) and not isinstance(condition, Column):
-            self._ops.append(lambda df: df.filter(condition(df)))
-        else:
-            self._ops.append(Predicate(condition).apply)
-        # root-targeted breaks add no local op (the truncation happens on
-        # the shared root flow), so there is no local stream to count
-        if not (
-            isinstance(condition, BreakAt) and condition.target == "root"
-        ):
-            self._observe_stage_op("qualify")
-        return self
-
-    def transform(self, transformer) -> "BranchPipeline":
-        self._counters["num_transform"] += 1
-        t = transformer if isinstance(transformer, Transformer) else Apply(transformer)
-        self._ops.append(t.apply)
-        self._observe_stage_op("transform")
-        return self
-
-    def join(self, source, on, how: str = "inner", broadcast: bool = False):
-        self._counters["num_join"] += 1
-
-        def op(df: DataFrame) -> DataFrame:
-            right = self._coerce_source(source)
-            return _join(df, right, on, how=how, broadcast=broadcast)
-
-        self._ops.append(op)
-        self._observe_stage_op("join")
-        return self
-
-    def limit(self, n: int) -> "BranchPipeline":
-        self._ops.append(lambda df: df.limit(n))
-        return self
-
-    def to(self, sink: Sink) -> "BranchPipeline":
-        self._counters["num_to"] += 1
-        self._sinks.append(sink)
-        return self

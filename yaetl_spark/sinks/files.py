@@ -20,6 +20,8 @@ from .base import Sink
 
 
 class ParquetSink(Sink):
+    fmt = "parquet"
+
     def __init__(self, path: str, mode: str = "overwrite",
                  partition_by: list[str] | None = None, **kw):
         super().__init__(**kw)
@@ -31,22 +33,11 @@ class ParquetSink(Sink):
         writer = df.write.mode(self.mode)
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.path)
+        writer.format(self.fmt).save(self.path)
 
 
-class OrcSink(Sink):
-    def __init__(self, path: str, mode: str = "overwrite",
-                 partition_by: list[str] | None = None, **kw):
-        super().__init__(**kw)
-        self.path = path
-        self.mode = mode
-        self.partition_by = partition_by
-
-    def write(self, df: DataFrame) -> None:
-        writer = df.write.mode(self.mode)
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.orc(self.path)
+class OrcSink(ParquetSink):
+    fmt = "orc"
 
 
 class CsvSink(Sink):
