@@ -101,6 +101,22 @@ def test_no_cartesian_in_cc_plan(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+@pytest.mark.parametrize("op", ["connected_components", "pagerank"])
+def test_small_graph_is_local_and_skips_checkpoint_dir(spark, tmp_path, op):
+    # under local_threshold the result is a driver-built LocalTableScan
+    # (no Python-worker RDD), and checkpoint_dir is never written: the
+    # reliable checkpoint belongs to the distributed loop only
+    import yaetl_spark.operators as ops
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "s long, d long")
+    out = getattr(ops, op)(edges, src="s", dst="d",
+                           checkpoint_dir=str(tmp_path))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert len(out.collect()) == 3
+    assert not list(tmp_path.iterdir())
+
+
 def test_inverted_index_pruning_and_order(spark):
     from yaetl_spark.operators import inverted_index
 
@@ -213,15 +229,20 @@ def test_keep_latest_tiebreak_and_invariance(spark):
 
 # --- pagerank ---------------------------------------------------------------
 
+# local_threshold=0 always runs the distributed loop; the default
+# solves these small graphs on the driver.
+PAGERANK_PATHS = pytest.mark.parametrize(
+    "local_threshold", [0, 100_000], ids=["distributed", "local"])
 
-def test_pagerank_known_graph_and_mass(spark):
-    import pytest
 
+@PAGERANK_PATHS
+def test_pagerank_known_graph_and_mass(spark, local_threshold):
     from yaetl_spark.operators import pagerank
 
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 1), (3, 4)], "src long, dst long")
-    got = {r["node"]: r["rank"] for r in pagerank(edges, iters=20).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(
+        edges, iters=20, local_threshold=local_threshold).collect()}
     # ranks are a probability distribution over the node set
     assert round(sum(got.values()), 5) == 1.0
     # node 3 has two in-links (from 1 and 2) -> highest rank
@@ -235,7 +256,8 @@ def test_pagerank_known_graph_and_mass(spark):
         pagerank(edges, damping=1.0)
 
 
-def test_pagerank_parallel_edges_weigh(spark):
+@PAGERANK_PATHS
+def test_pagerank_parallel_edges_weigh(spark, local_threshold):
     from yaetl_spark.operators import pagerank
 
     # 1 -> 2 twice, 1 -> 3 once: 2 must outrank 3
@@ -243,25 +265,99 @@ def test_pagerank_parallel_edges_weigh(spark):
         [(1, 2), (1, 3), (2, 1), (3, 1)], "src long, dst long")
     doubled = spark.createDataFrame(
         [(1, 2), (1, 2), (1, 3), (2, 1), (3, 1)], "src long, dst long")
-    s = {r["node"]: r["rank"] for r in pagerank(single, iters=10).collect()}
-    d = {r["node"]: r["rank"] for r in pagerank(doubled, iters=10).collect()}
+    s = {r["node"]: r["rank"] for r in pagerank(
+        single, iters=10, local_threshold=local_threshold).collect()}
+    d = {r["node"]: r["rank"] for r in pagerank(
+        doubled, iters=10, local_threshold=local_threshold).collect()}
     assert s[2] == s[3]
     assert d[2] > d[3]
 
 
-def test_pagerank_partition_invariant_and_dangling_only(spark):
+@PAGERANK_PATHS
+def test_pagerank_partition_invariant_and_dangling_only(spark, local_threshold):
     from yaetl_spark.operators import pagerank
 
     edges = spark.createDataFrame(
         [(i, (i * 7) % 20) for i in range(60)], "src long, dst long")
-    a = sorted(map(tuple, pagerank(edges.repartition(1), iters=5).collect()))
-    b = sorted(map(tuple, pagerank(edges.repartition(9), iters=5).collect()))
+    a = sorted(map(tuple, pagerank(
+        edges.repartition(1), iters=5,
+        local_threshold=local_threshold).collect()))
+    b = sorted(map(tuple, pagerank(
+        edges.repartition(9), iters=5,
+        local_threshold=local_threshold).collect()))
     assert a == b
     # a pure sink graph (all mass dangles) stays uniform
     sink = spark.createDataFrame([(1, 2), (3, 2)], "src long, dst long")
-    got = {r["node"]: r["rank"] for r in pagerank(sink, iters=4).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(
+        sink, iters=4, local_threshold=local_threshold).collect()}
     assert round(sum(got.values()), 5) == 1.0
     assert got[2] > got[1] == got[3]
+
+
+def _pagerank_rows(edges, **kw):
+    from yaetl_spark.operators.graph import pagerank
+
+    return sorted(map(tuple, pagerank(edges, **kw).collect()))
+
+
+@pytest.mark.parametrize("iters", [1, 3, 10])
+def test_pagerank_local_path_matches_distributed_bits(spark, iters):
+    import random
+
+    rng = random.Random(11)
+    multigraph = spark.createDataFrame(
+        [(rng.randrange(80), rng.randrange(80)) for _ in range(1500)],
+        "src long, dst long")
+    for kw in ({}, {"damping": 0.5}):
+        local = _pagerank_rows(multigraph, iters=iters, **kw)
+        assert local == _pagerank_rows(
+            multigraph, iters=iters, local_threshold=0, **kw)
+        assert len(local) == 80
+
+
+def test_pagerank_catalog_edges_same_bits_on_both_paths(spark, monkeypatch):
+    import __spark_entry__ as entry_mod
+    import yaetl_spark.operators as ops
+
+    from .conftest import SF_DIR
+
+    # capture the catalog query's own edge frame and column names
+    seen = {}
+
+    def capture(edges, **kw):
+        seen.update(edges=edges, src=kw["src"], dst=kw["dst"])
+        return edges
+
+    monkeypatch.setattr(ops, "pagerank", capture)
+    entry_mod.queries()["pagerank"](spark, SF_DIR)
+    edges = seen.pop("edges")
+    for iters in (1, 3, 10):
+        local = _pagerank_rows(edges, iters=iters, **seen)
+        assert local, "catalog pagerank graph is empty"
+        assert local == _pagerank_rows(
+            edges, iters=iters, local_threshold=0, **seen)
+
+
+def test_half_up_units_matches_spark_round_to_decimal(spark):
+    import random
+
+    import numpy as np
+
+    from yaetl_spark.operators.graph import _half_up_units
+
+    rng = random.Random(5)
+    # doubles whose shortest repr sits exactly on a half-nano boundary,
+    # plus their neighbours one ulp either side
+    halves = [0.5e-9, 1.5e-9, 2.5e-9, 0.1234567885, 0.9999999995, 0.0000000125]
+    halves += [float(f"0.{rng.randrange(10**9):09d}5") for _ in range(300)]
+    vals = sorted({v2 for v in halves
+                   for v2 in (v, np.nextafter(v, 0.0), np.nextafter(v, 1.0))}
+                  | {0.0, 1.0, 1 / 3, 2 / 3})
+    got = spark.createDataFrame([(float(v),) for v in vals], "x double") \
+        .select(F.round("x", 9).cast("decimal(20,9)").alias("u")) \
+        .collect()
+    want = [int(r["u"].scaleb(9)) for r in got]
+    assert _half_up_units(np.array(vals), 9).tolist() == want
 
 
 def test_ewma_matches_pandas_recurrence(spark):

@@ -628,14 +628,43 @@ def test_fuzzy_match_plan_shape(spark):
     assert "Window" in plan  # keep="best" top-1
 
 
-def test_pagerank_loop_artifacts_bounded(spark):
-    """pagerank: the per-iteration plan (after lineage truncation) is
-    one rank⋈edge join + dst-keyed agg + the 1-row dangling broadcast —
-    no cartesian/nested-loop, no Python stages."""
+def test_pagerank_loop_artifacts_bounded(spark, monkeypatch):
+    """pagerank's distributed loop (``local_threshold=0``): the
+    per-iteration plan (after lineage truncation) is one rank⋈edge join
+    + dst-keyed agg + the 1-row dangling broadcast — no
+    cartesian/nested-loop, no Python stages."""
+    import functools
+
+    import yaetl_spark.operators as ops
+
+    monkeypatch.setattr(ops, "pagerank",
+                        functools.partial(ops.pagerank, local_threshold=0))
     plan = plan_of(spark, "pagerank")
+    assert "LocalTableScan" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in plan
+
+
+def test_pagerank_small_graph_is_local_and_few_jobs(spark):
+    """The catalog pagerank graph (~100 nodes) is under the default
+    ``local_threshold``: one probe count plus one Arrow fetch while it
+    is built (the distributed loop fires ~35 jobs), and the result is a
+    driver-built ``LocalTableScan`` with no Python stage."""
+    sc = spark.sparkContext
+    group = "test-pagerank-build-jobs"
+    sc.setJobGroup(group, "pagerank build")
+    try:
+        df = entry_mod.queries()["pagerank"](spark, SF_DIR)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 8, jobs
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.lstrip().startswith("LocalTableScan"), plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                 "ExistingRDD"):
         assert node not in plan
 
 

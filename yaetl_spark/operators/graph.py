@@ -18,16 +18,23 @@ truncation the loop's plan doubles per round and Catalyst analysis time
 explodes) — by default with a lazy ``localCheckpoint`` (plan truncation
 is immediate, materialization rides the next action, and the blocks
 live on executors — lost on executor death), or, when
-``checkpoint_dir=`` is given, with a reliable eager ``checkpoint()`` to
-that directory so the loop survives executor loss on a real cluster. Edges
-for near-dup graphs are
+``checkpoint_dir=`` is given and the loop runs distributed, with a
+reliable eager ``checkpoint()`` to that directory so the loop survives
+executor loss on a real cluster. Edges for near-dup graphs are
 tiny relative to the corpus (only dup candidates appear), so the label
 frame — two longs per node — is the largest shuffled artifact; raw
 documents never enter the loop.
+
+Both loops first decide, with one count, whether the graph is small
+enough to solve on the driver; a small graph is fetched once and its
+result returned as an Arrow-built local frame (``LocalTableScan``).
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -68,29 +75,15 @@ def connected_components(
     switches to reliable ``checkpoint()`` so the truncated frames are
     replicated to that directory and the loop survives executor loss —
     the right setting for a long dedup job on a real cluster. Both
-    strategies compute the identical fixpoint.
+    strategies compute the identical fixpoint. The directory is used only
+    when the distributed loop runs (a small graph writes nothing there),
+    and it is set with ``sc.setCheckpointDir``, which changes the
+    checkpoint directory for the whole Spark session.
 
     Raises ``RuntimeError`` if the distributed loop hits ``max_iter``
     rounds without converging (pointer doubling makes that ~2^max_iter of
     effective diameter, so it signals bad input, not tuning).
     """
-    if checkpoint_dir is not None:
-        sc = edges.sparkSession.sparkContext
-        sc.setCheckpointDir(checkpoint_dir)
-
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-        # Lazy: the logical plan is truncated to an RDD node immediately
-        # (that is what bounds Catalyst analysis of the loop), but the
-        # materializing job is deferred to the next action that needs
-        # the data — the per-iteration convergence count below, or the
-        # caller's own action — instead of a dedicated count() job per
-        # truncation. Guide §5: each synchronous driver job is pure
-        # round-trip latency at any scale.
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
-
     e = (
         edges.select(
             F.col(src).cast("long").alias("a"),
@@ -105,8 +98,9 @@ def connected_components(
     # the probe's count() materialize the deduped edge blocks, so the
     # collect() below (small-graph path) and the iteration joins
     # (distributed path) both read those blocks instead of re-running
-    # the scan + distinct.
-    e = _truncate(e)
+    # the scan + distinct. A reliable checkpoint is written only once
+    # the graph is known to need the distributed loop.
+    e = e.localCheckpoint(eager=False)
 
     if local_threshold:
         # Localization probe: ONE fully-parallel count() job. (r16 used
@@ -121,6 +115,9 @@ def connected_components(
         if e.count() <= local_threshold:
             return _local_union_find(e.collect(), e.sparkSession)
 
+    _truncate = _truncator(e, checkpoint_dir)
+    if checkpoint_dir is not None:
+        e = _truncate(e)
     labels = _truncate(
         e.select(F.col("a").alias("node"))
         .distinct()
@@ -173,11 +170,42 @@ def connected_components(
     )
 
 
+def _truncator(df: DataFrame, checkpoint_dir: str | None):
+    """The lineage truncation a distributed driver loop applies to its
+    frames each round.
+
+    ``None``: lazy ``localCheckpoint``. The logical plan is cut to an RDD
+    node at once (that is what bounds Catalyst analysis of the loop), but
+    the materializing job rides the next action that needs the data
+    instead of a dedicated job per truncation: each synchronous driver
+    job is pure round-trip latency at any scale.
+
+    A path: reliable eager ``checkpoint()`` to that directory, so the
+    loop survives executor loss. This calls ``sc.setCheckpointDir``,
+    which changes the checkpoint directory for the whole session."""
+    if checkpoint_dir is None:
+        return lambda d: d.localCheckpoint(eager=False)
+    df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    return lambda d: d.checkpoint(eager=True)
+
+
+def _local_frame(spark, columns: dict, schema: str) -> DataFrame:
+    """A result computed on the driver, as an Arrow-built local relation.
+
+    Spark plans it as ``LocalTableScan`` (up to
+    ``spark.sql.execution.arrow.localRelationThreshold``), so using it
+    starts no job and no Python worker. ``createDataFrame(list)`` instead
+    runs its rows through a Python-worker RDD when the result executes."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
 def _local_union_find(rows, spark) -> DataFrame:
     """Driver-side union-find over a small collected (already
     symmetrized) edge list: path-halving + union-by-min so every root
     is its component's minimum id. The rows arrive from the caller's
-    single bounded probe collect; one createDataFrame out — the classic
+    single bounded probe collect; one local frame out — the classic
     small-side localization. The fixpoint is order-independent, so the
     collect's partition order never matters."""
     parent: dict[int, int] = {}
@@ -196,8 +224,11 @@ def _local_union_find(rows, spark) -> DataFrame:
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    out = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(out, "node long, comp long")
+    return _local_frame(
+        spark,
+        {"node": list(parent), "comp": [find(n) for n in parent]},
+        "node long, comp long",
+    )
 
 
 def dedup_clusters(
@@ -213,7 +244,8 @@ def dedup_clusters(
     documents that appear in at least one pair are returned — at corpus
     scale the overwhelming majority of docs never enter the graph.
     ``checkpoint_dir`` forwards to :func:`connected_components` for
-    cluster-durable lineage truncation."""
+    cluster-durable lineage truncation (it sets the session-wide
+    ``sc.setCheckpointDir`` when the distributed loop runs)."""
     cc = connected_components(
         pairs, src=id_a, dst=id_b, max_iter=max_iter,
         local_threshold=local_threshold, checkpoint_dir=checkpoint_dir)
@@ -242,6 +274,7 @@ def pagerank(
     dst: str = "dst",
     iters: int = 10,
     damping: float = 0.85,
+    local_threshold: int = 100_000,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over a directed multigraph (Page et al. 1999), with
@@ -264,17 +297,32 @@ def pagerank(
     absorb-the-ulps pattern as ngram_perplexity/dsir_score).
 
     Scale shape (100 TB / web-graph):
-    - edges pre-aggregate to ``(src, dst, w)`` once — the per-iteration
-      work is ONE rank⋈edge equi join (shuffle on src) plus one
-      dst-keyed partial-agg sum; ranks are two columns per node, the
-      raw input never re-enters the loop;
+    - edges pre-aggregate to ``(src, dst, w)`` once, and one count of
+      those weighted edges decides where the iterations run;
+    - small graph (count ≤ ``local_threshold``, same name, default and
+      meaning as on :func:`connected_components`; ``0`` always runs
+      distributed): the weighted edges are fetched to the driver in one
+      Arrow collect, the ``iters`` power iterations run in NumPy, and
+      the ranks come back as an Arrow-built local frame
+      (``LocalTableScan``) — no job per iteration. Bit-parity contract:
+      this path repeats the distributed loop's arithmetic step by step
+      (``rank·w/out`` in float64 in the same order; each term rounded
+      HALF_UP on its shortest repr, as Spark's ``round(x, 9)`` and the
+      DECIMAL(20,9) cast do; exact integer-nano sums divided once by
+      1e9; the same update expression; ``round(rank, 6)``), so both
+      paths, and the oracle, return the same bits;
+    - distributed: the per-iteration work is ONE rank⋈edge equi join
+      (shuffle on src) plus one dst-keyed partial-agg sum; ranks are
+      two columns per node, the raw input never re-enters the loop;
     - the dangling mass is a 1-row aggregate attached in-plan via a
       broadcast hash join (:func:`~yaetl_spark.operators.curation.attach_scalars`)
       — no driver round-trip per iteration;
     - lineage is truncated every iteration (localCheckpoint, or
       reliable ``checkpoint()`` under ``checkpoint_dir=`` to survive
-      executor loss — same strategy as :func:`connected_components`);
-      one count job fixes ``N`` up front.
+      executor loss — same strategy as :func:`connected_components`,
+      including its session-wide ``sc.setCheckpointDir``, and likewise
+      used only on the distributed path); one count job fixes ``N`` up
+      front.
     """
     from .curation import attach_scalars
 
@@ -282,24 +330,10 @@ def pagerank(
         raise ValueError("iters must be >= 1")
     if not 0.0 < damping < 1.0:
         raise ValueError("damping must be in (0, 1)")
-    if checkpoint_dir is not None:
-        sc = edges.sparkSession.sparkContext
-        sc.setCheckpointDir(checkpoint_dir)
 
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-        # Lazy local checkpoint: lineage/plan truncation is immediate
-        # (the loop's Catalyst plans stay iteration-sized), but no
-        # per-iteration materializing job is submitted — the single
-        # nodes.count() below and the caller's own action compute the
-        # whole chain, each truncated frame caching as it materializes.
-        # iters eager checkpoints = iters synchronous driver round
-        # trips saved (guide §5), locally and on a cluster alike.
-        def _truncate(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
-
-    e = _truncate(
+    # Lazy local checkpoint: the localization probe's count materializes
+    # the weighted edges once, for the Arrow fetch or the loop's joins.
+    e = (
         edges.select(
             F.col(src).cast("long").alias("_s"),
             F.col(dst).cast("long").alias("_d"),
@@ -307,7 +341,18 @@ def pagerank(
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
         .groupBy("_s", "_d")
         .agg(F.count(F.lit(1)).alias("_w"))
+        .localCheckpoint(eager=False)
     )
+    if local_threshold and e.count() <= local_threshold:
+        return _local_pagerank(e, iters, damping)
+
+    # With lazy local checkpoints no per-iteration materializing job is
+    # submitted: the single nodes.count() below and the caller's own
+    # action compute the whole chain, each truncated frame caching as
+    # it materializes.
+    _truncate = _truncator(e, checkpoint_dir)
+    if checkpoint_dir is not None:
+        e = _truncate(e)
     outw = e.groupBy("_s").agg(F.sum("_w").alias("_ow"))
     nodes = _truncate(
         e.select(F.col("_s").alias("node"))
@@ -360,3 +405,56 @@ def pagerank(
             )
         )
     return ranks.select("node", F.round("rank", 6).alias("rank"))
+
+
+def _local_pagerank(e: DataFrame, iters: int, damping: float) -> DataFrame:
+    """:func:`pagerank` on the driver: one Arrow fetch of the weighted
+    edges ``(_s, _d, _w)``, then the distributed loop's arithmetic
+    repeated step by step in NumPy, so both paths return the same bits.
+    Term sums are integer nanos; summed as float64 they stay exact,
+    since every sum is far below 2**53 nanos (ranks sum to about 1)."""
+    t = e.toArrow()
+    s, d, w = (t.column(c).to_numpy() for c in ("_s", "_d", "_w"))
+    nodes, idx = np.unique(np.concatenate([s, d]), return_inverse=True)
+    n = len(nodes)
+    rank = np.zeros(0)
+    if n:
+        si, di = idx[: len(s)], idx[len(s):]
+        out_w = np.bincount(si, weights=w, minlength=n)
+        dangling = out_w == 0
+        w, ow = w.astype(np.float64), out_w[si]
+        base = (1.0 - damping) / n
+        rank = np.full(n, 1.0 / n)
+        for _ in range(iters):
+            dang = _half_up_units(rank[dangling], 9).sum() / 1e9
+            contrib = np.bincount(
+                di, weights=_half_up_units(rank[si] * w / ow, 9), minlength=n
+            ) / 1e9
+            rank = base + damping * (contrib + dang / float(n))
+    return _local_frame(
+        e.sparkSession,
+        {"node": nodes, "rank": _half_up_units(rank, 6) / 1e6},
+        "node long, rank double",
+    )
+
+
+def _half_up_units(x, scale: int):
+    """Non-negative finite doubles ``x`` as int64 units of
+    ``10**-scale``, rounded HALF_UP on each value's shortest decimal
+    repr — what Spark's ``round(x, scale)`` (``BigDecimal.valueOf(x)
+    .setScale(scale, HALF_UP)``) and its cast to ``decimal(p, scale)``
+    compute.
+
+    Vectorized as ``floor(x * 10**scale + 0.5)``. Below 2**31 units the
+    float error of that is under 1e-6 units, so it can only be wrong for
+    values within 1e-6 units of a half unit; those, and larger values,
+    are redone exactly through ``Decimal(repr(x))``."""
+    y = x * 10.0 ** scale
+    units = np.floor(y + 0.5).astype(np.int64)
+    near_half = np.abs(y - np.floor(y) - 0.5) < 1e-6
+    for i in np.flatnonzero(near_half | (y >= 2.0 ** 31)):
+        units[i] = int(
+            Decimal(repr(float(x[i]))).scaleb(scale)
+            .to_integral_value(rounding=ROUND_HALF_UP)
+        )
+    return units

@@ -360,11 +360,10 @@ class MergeParquetSink(Sink):
         stage = self.path.rstrip("/") + "._merge_stage"
         shutil.rmtree(stage, ignore_errors=True)
         merged.write.mode("overwrite").parquet(stage)
-        staged = spark.read.parquet(stage)
         try:
             if self.partition_by:
                 (
-                    staged.write.mode("overwrite")
+                    spark.read.parquet(stage).write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy(*self.partition_by)
                     .parquet(self.path)
