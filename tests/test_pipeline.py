@@ -797,3 +797,217 @@ def test_root_and_branch_share_one_grammar(spark, form):
     assert by_kind(root) == by_kind(branched) == {
         "extract": 60, "qualify": 40, "transform": 40, "join": 30, "load": 30,
     }
+
+
+class _MeetSink(CollectSink):
+    """Collects only after meeting its sibling writers at a barrier: the
+    write succeeds only if those writers run at the same time."""
+
+    def __init__(self, barrier, started=None, **kw):
+        super().__init__(**kw)
+        self.barrier = barrier
+        self.started = started
+
+    def write(self, df):
+        if self.started is not None:
+            self.started.set()
+        self.barrier.wait()
+        super().write(df)
+
+
+def test_branch_chains_write_concurrently(spark):
+    """Two branch chains meet at a barrier inside their sink writes: run()
+    writes independent chains at the same time, not one after another."""
+    import threading
+
+    meet = threading.Barrier(2, timeout=30)
+    evens, odds = _MeetSink(meet), _MeetSink(meet)
+    report = (
+        Pipeline(spark)
+        .from_(MemorySource([(i,) for i in range(10)], "id int"))
+        .branch(BranchPipeline(spark).qualify("id % 2 = 0").to(evens))
+        .branch(BranchPipeline(spark).qualify("id % 2 = 1").to(odds))
+        .run()
+    )
+    assert report["status"] == "clean" and report["num_records"] == 10
+    assert sorted(r["id"] for r in evens.rows) == [0, 2, 4, 6, 8]
+    assert sorted(r["id"] for r in odds.rows) == [1, 3, 5, 7, 9]
+
+
+def test_reject_chain_starts_before_materialization(spark, monkeypatch):
+    """The reject stream has its own lineage: it starts before the shared
+    frame is built, and it writes alongside the root chain."""
+    import threading
+
+    from yaetl_spark.sinks.base import NoOpSink
+
+    meet, reject_started = threading.Barrier(2, timeout=30), threading.Event()
+    materialized: list = []
+    noop_write = NoOpSink.write
+
+    def materialize(self, df):
+        materialized.append(reject_started.wait(30))
+        return noop_write(self, df)
+
+    monkeypatch.setattr(NoOpSink, "write", materialize)
+    kept, copy = _MeetSink(meet), CollectSink()
+    rejected = _MeetSink(meet, started=reject_started)
+    report = (
+        Pipeline(spark)
+        .from_(MemorySource([(i,) for i in range(6)], "id int"))
+        .qualify("id < 4", reject_to=rejected)
+        .to(kept)
+        .to(copy)
+        .run()
+    )
+    assert materialized == [True]
+    assert report["num_records"] == 4 and report["num_rejected"] == 2
+    assert sorted(r["id"] for r in kept.rows) == [0, 1, 2, 3]
+    assert sorted(r["id"] for r in copy.rows) == [0, 1, 2, 3]
+    assert sorted(r["id"] for r in rejected.rows) == [4, 5]
+
+
+def test_chains_sharing_a_target_append_in_turn(spark, tmp_path):
+    """A root sink and two branch sinks appending to one parquet directory
+    run in turn (concurrent commits into one directory race): every run
+    lands exactly its rows."""
+    from yaetl_spark.sinks import ParquetSink
+
+    out = str(tmp_path / "shared")
+    src = MemorySource([(i,) for i in range(12)], "id int")
+    for run in range(1, 9):
+        (
+            Pipeline(spark)
+            .from_(src)
+            .to(ParquetSink(out, mode="append"))
+            .branch(BranchPipeline(spark).qualify("id < 5").to(
+                ParquetSink(out, mode="append")))
+            .branch(BranchPipeline(spark).qualify("id >= 9").to(
+                ParquetSink(out, mode="append")))
+            .run()
+        )
+        assert spark.read.parquet(out).count() == run * (12 + 5 + 3)
+
+
+def test_sink_jobs_inherit_the_callers_job_group(spark):
+    """Every job a run fires — the materialization, each chain's writes,
+    the reject stream — carries the job group set by the caller."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    grouped = set(tracker.getJobIdsForGroup("g"))
+    sc.setJobGroup("g", "fan-out under one job group")
+    try:
+        (
+            Pipeline(spark)
+            .from_(MemorySource([(i,) for i in range(10)], "id int"))
+            .qualify("id < 8", reject_to=CollectSink())
+            .to(CollectSink())
+            .to(CollectSink())
+            .branch(BranchPipeline(spark).qualify("id < 3").to(CollectSink()))
+            .run()
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # materialization + three flow sinks + the reject sink
+    assert len(set(tracker.getJobIdsForGroup("g")) - grouped) >= 5
+
+
+def test_failed_branch_stops_only_its_chain(spark):
+    """One branch sink raises while its sibling finishes: the error
+    propagates, flow.fail fires once, every started sink flushes
+    'exception' in declared order, and the shared frame is unpersisted."""
+    seen: list = []
+
+    class Boom(CollectSink):
+        def write(self, df):
+            raise RuntimeError("boom")
+
+    def hook(name):
+        return lambda status: seen.append((name, status))
+
+    root, sibling = CollectSink(on_flush=hook("root")), CollectSink(
+        on_flush=hook("sibling"))
+    events: list = []
+    persistent = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(RuntimeError, match="boom"):
+        (
+            Pipeline(spark)
+            .from_(MemorySource([(i,) for i in range(10)], "id int"))
+            .to(root)
+            .branch(BranchPipeline(spark).to(Boom(on_flush=hook("boom"))))
+            .branch(BranchPipeline(spark).qualify("id < 4").to(sibling))
+            .run(on_event=lambda e, p: events.append(e))
+        )
+    assert [e for e in events if e == "flow.fail"] == ["flow.fail"]
+    assert seen == [("root", "exception"), ("boom", "exception"),
+                    ("sibling", "exception")]
+    assert sorted(r["id"] for r in sibling.rows) == [0, 1, 2, 3]
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= persistent
+
+
+def test_count_stages_load_names_follow_declared_order(spark):
+    """Load counters are named on the calling thread before any chain
+    starts, so their keys and values do not depend on which chain writes
+    first."""
+    runs = []
+    for _ in range(3):
+        report = (
+            Pipeline(spark, count_stages=True)
+            .from_(MemorySource([(i,) for i in range(10)], "id long"))
+            .branch(BranchPipeline(spark).qualify("id < 3").to(CollectSink()))
+            .branch(BranchPipeline(spark).qualify("id < 7").to(CollectSink()))
+            .run()
+        )
+        runs.append(list(report["stage_records"].items()))
+    assert runs == [[("extract_0", 10), ("load_0", 3), ("load_1", 7)]] * 3
+
+
+def test_callbacks_never_overlap(spark):
+    """on_event callbacks and flush hooks run one at a time, whichever
+    thread fires them: progress ticks from the poller, a force_flush from
+    a sink thread while a sibling chain still runs, and the root flush
+    from the caller."""
+    import time as _t
+
+    log: list = []
+
+    def guarded(tag):
+        log.append(("enter", tag))
+        _t.sleep(0.02)
+        log.append(("exit", tag))
+
+    def slow(seconds):
+        def op(df):
+            @F.pandas_udf("long")
+            def crawl(s):
+                _t.sleep(seconds)
+                return s
+
+            return df.repartition(2).withColumn("id", crawl("id"))
+
+        return op
+
+    events: list = []
+
+    def on_event(e, p):
+        events.append((e, p))
+        guarded(e)
+
+    (
+        Pipeline(spark)
+        .from_(MemorySource([(i,) for i in range(16)], "id int"))
+        .to(CollectSink(on_flush=lambda s: guarded("root-hook")))
+        .branch(BranchPipeline(spark).transform(slow(1.0)).to(
+            CollectSink(on_flush=lambda s: guarded("branch-hook"))))
+        .branch(BranchPipeline(spark).transform(slow(0.1)).to(
+            CollectSink(force_flush=True,
+                        on_flush=lambda s: guarded("forced-hook"))))
+        .run(on_event=on_event, progress_interval=0.01)
+    )
+    names = [e for e, _ in events]
+    assert "flow.progress" in names
+    assert any(e == "flow.flush" and p.get("forced") for e, p in events)
+    assert any(e == "flow.flush" and not p.get("forced") for e, p in events)
+    assert [kind for kind, _ in log] == ["enter", "exit"] * (len(log) // 2)

@@ -194,6 +194,45 @@ def test_kmeans_deterministic(clustered):
         assert all(math.isclose(x, y, rel_tol=1e-9) for x, y in zip(va, vb))
 
 
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_fit"])
+@pytest.mark.parametrize("bad, match", [
+    ([0, float("nan"), 200], "NaN"),
+    ([0, "100", 200], "mix id types"),
+], ids=["nan", "mixed"])
+def test_fit_rejects_unorderable_init_ids(clustered, fit, bad, match):
+    """init_ids are sorted on the driver, so ids without a total order
+    (a NaN; an int next to a str) raise ValueError before any job runs
+    instead of a TypeError or an arbitrary order mid-fit."""
+    import yaetl_spark.operators as ops
+
+    with pytest.raises(ValueError, match=match):
+        getattr(ops, fit)(clustered, k=3, iters=1, init_ids=bad)
+
+
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_fit"])
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_fit_init_rows_follow_order_by_cid(spark, fit, id_type):
+    """Int and str init ids start the fit in ``orderBy("cid")`` order —
+    numeric for ints, lexicographic for strings ("100" < "25" < "3")."""
+    import yaetl_spark.operators as ops
+
+    cast = str if id_type == "string" else int
+    df = spark.createDataFrame(
+        [(cast(i), [float(i), -float(i)]) for i in (3, 10, 25, 100, 7)],
+        f"vec_id {id_type}, embedding array<double>",
+    )
+    init = [cast(i) for i in (100, 3, 25)]
+    expected = [
+        list(r.embedding) for r in
+        df.filter(F.col("vec_id").isin(init)).orderBy("vec_id").collect()
+    ]
+    if fit == "kmeans_fit":
+        got = ops.kmeans_fit(df, k=3, iters=0, init_ids=init)
+    else:
+        [got] = ops.pq_fit(df, m=1, k=3, iters=0, init_ids=init)
+    assert [v for _, v in got] == expected
+
+
 def test_kmeans_high_dim_update_is_dim_independent(spark):
     """dim=256: the posexplode update keeps the plan at two aggregate
     expressions total (count + sum over the exploded value) instead of

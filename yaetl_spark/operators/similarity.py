@@ -14,7 +14,9 @@
 
 from __future__ import annotations
 
+import decimal
 import math
+import numbers
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -209,6 +211,32 @@ def ivf_topk(
     )
 
 
+def _init_rows(base: DataFrame, init_ids, fn: str) -> list:
+    """The ``(cid, cvec)`` rows of ``init_ids`` in id order, the order
+    ``.orderBy("cid")`` gives. The ≤ k rows are collected unordered and
+    sorted on the driver: ``.orderBy().collect()`` pays a
+    range-partitioning SAMPLING job before the sort job — two sequential
+    driver round trips to order a handful of rows (guide §5). That sort
+    needs ids of one comparable type and no NaN (NaN has no order; an
+    int next to a str raises mid-fit), so both are checked first."""
+    ids = list(init_ids)
+    kinds = {
+        "str" if isinstance(i, str)
+        else "number" if isinstance(i, (numbers.Real, decimal.Decimal))
+        and not isinstance(i, bool)
+        else type(i).__name__
+        for i in ids
+    }
+    if len(kinds) > 1:
+        raise ValueError(
+            f"{fn}: init_ids mix id types ({', '.join(sorted(kinds))}); "
+            "they must be all numbers or all strings")
+    if any(i != i for i in ids):
+        raise ValueError(f"{fn}: init_ids contain NaN, which has no order")
+    return sorted(base.filter(F.col("cid").isin(ids)).collect(),
+                  key=lambda r: r.cid)
+
+
 def kmeans_fit(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -242,14 +270,7 @@ def kmeans_fit(
     """
     base = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
     if init_ids is not None:
-        # collect the ≤ k init rows unordered and sort on the driver:
-        # .orderBy().collect() pays a range-partitioning SAMPLING job
-        # before the sort job — two sequential driver round trips to
-        # order a handful of rows (guide §5). Same id order, one job.
-        rows = sorted(
-            base.filter(F.col("cid").isin(list(init_ids))).collect(),
-            key=lambda r: r.cid,
-        )
+        rows = _init_rows(base, init_ids, "kmeans_fit")
     else:
         rows = (
             base.orderBy(F.xxhash64(F.col("cid") + F.lit(seed)))
@@ -381,12 +402,7 @@ def pq_fit(
 
     base = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
     if init_ids is not None:
-        # unordered collect + driver-side sort — saves the range-
-        # partitioning sampling job, same order (see kmeans_fit)
-        rows = sorted(
-            base.filter(F.col("cid").isin(list(init_ids))).collect(),
-            key=lambda r: r.cid,
-        )
+        rows = _init_rows(base, init_ids, "pq_fit")
     else:
         rows = (
             base.orderBy(F.xxhash64(F.col("cid") + F.lit(seed)))

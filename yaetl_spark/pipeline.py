@@ -17,34 +17,70 @@ Spark-first equivalent::
         .run())
 
 Execution model: every grammar call composes *lazy* DataFrame
-transformations; ``run()`` triggers exactly one write action per sink.
-With multiple sinks/branches the shared upstream is persisted so the slow
-extract runs once (the reference's whole reason for branches,
-``README.md:219-246``). ``run()`` returns a stats report with the
-reference's counter vocabulary (``num_extract``/``num_transform``/…,
-``YaEtl.php:38-53``) sourced from ``df.observe`` metrics — observed on the
-executors, no second pass over the data.
+transformations; ``run()`` triggers one write action per sink. With
+multiple sinks/branches the shared upstream is persisted and built once
+(one materialization job) so the slow extract runs once (the reference's
+whole reason for branches, ``README.md:219-246``); then every independent
+sink chain — the root's sinks, each branch's, each reject stream's —
+writes on its own thread, so the chains' jobs share the cluster at the
+same time instead of queueing one after another. ``run()`` returns a
+stats report with the reference's counter vocabulary
+(``num_extract``/``num_transform``/…, ``YaEtl.php:38-53``) sourced from
+``df.observe`` metrics — observed on the executors, no second pass over
+the data.
 """
 
 from __future__ import annotations
 
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from .operators.joins import OnClause, join as _join
 from .operators.qualifiers import Predicate, Qualifier
 from .operators.transformers import Apply, Transformer
-from .sinks.base import Sink
+from .sinks.base import NoOpSink, Sink
 from .sources.base import DataFrameSource, Source
 
 
 class PipelineError(Exception):
     pass
+
+
+def _inherit(spark: SparkSession, fn: Callable) -> Callable:
+    """``fn`` wrapped to run on another thread with this thread's Spark
+    local properties (job group, description, scheduler pool) and session
+    tags, copied now."""
+    wrap = inheritable_thread_target(spark)
+    # with pinned-thread mode off PySpark hands the session back unwrapped
+    return fn if wrap is spark else wrap(fn)
+
+
+def _serial_groups(chains: list[list[Sink]]) -> list[list[int]]:
+    """Chain indices grouped so that chains sharing a sink object or a
+    target (``path``/``table`` attribute) fall in one group: two writers
+    committing into one directory or table at once race (and
+    :class:`MergeParquetSink` swaps directories next to its ``path``).
+    Groups come in order of their first chain, members in declared
+    order."""
+    groups: list[tuple[set, list[int]]] = []
+    for i, sinks in enumerate(chains):
+        keys = {("sink", id(s)) for s in sinks} | {
+            ("target", v) for s in sinks for a in ("path", "table")
+            if (v := getattr(s, a, None)) is not None}
+        hits = [g for g in groups if g[0] & keys]
+        for g in hits:
+            groups.remove(g)
+            keys |= g[0]
+        groups.append((keys, sorted([i, *(c for g in hits for c in g[1])])))
+    return sorted((members for _, members in groups), key=lambda m: m[0])
 
 
 class Pipeline:
@@ -387,6 +423,29 @@ class Pipeline:
         stats report. With no sink, runs a noop write so the flow is
         actually exercised (parity: a YaEtl flow always executes).
 
+        Write order. Each ``qualify(reject_to=)`` stream starts on its own
+        thread at once (it has its own lineage). With more than one root or
+        branch sink, this thread then builds the persisted shared frame
+        with one noop write; after that the root's chain and every
+        branch's chain each start on their own thread. Rules:
+
+        - sinks inside one chain run in declared order, so a returning
+          sink feeds the next;
+        - chains that share a sink object or a target (``path`` /
+          ``table``) run on one thread, in declared order;
+        - ``force_flush`` sinks flush right after their own write; every
+          other started sink flushes at the end, in declared order
+          (root's, then each branch's, then the reject sinks);
+        - ``run()`` waits for every chain it started, then flushes,
+          unpersists and re-raises the first failure in declared chain
+          order; a failed chain stops, its siblings finish;
+        - sink threads inherit this thread's Spark local properties (job
+          group, description, scheduler pool) and session tags.
+
+        ``on_event`` callbacks and ``on_flush`` hooks never overlap: they
+        run one at a time behind one lock, whichever thread (a sink's, the
+        progress poller's, this one) fires them.
+
         ``on_event`` receives (event, payload) callbacks mirroring the
         reference's event vocabulary (``src/Events/YaEtlEvent.php:17-37``):
         ``flow.start``, ``flow.flush`` (per sink), ``flow.success`` /
@@ -460,9 +519,14 @@ class Pipeline:
             broke or self._dirty or any(b._dirty for b in self._branches)
         ) else "clean"
 
+        # one lock for every callback: sink threads, the progress poller
+        # and this thread never run on_event or a flush hook at once
+        lock = threading.RLock()
+
         def emit(event: str, **payload) -> None:
             if on_event is not None:
-                on_event(event, payload)
+                with lock:
+                    on_event(event, payload)
 
         emit("flow.start", counters=dict(self._counters))
         progress_stop = self._start_progress_poller(
@@ -472,70 +536,115 @@ class Pipeline:
         obs = Observation("_pipeline")
         df = df.observe(obs, F.count(F.lit(1)).alias("num_records"))
 
-        # sink chains: the root's sinks run in declared order over the root
-        # frame, each branch's over its own lineage; within a chain a
-        # returning sink's output feeds the next sink (docs/citizens.md:
-        # 465-496 chained loaders)
-        chains: list[tuple[list[Sink], DataFrame, bool]] = []
+        # sink chains in declared order: the root's sinks over the root
+        # frame, each branch's over its own lineage, then the reject
+        # side-streams (independent lineage, captured pre-filter at their
+        # qualify stage, so they neither consume nor justify the persist
+        # below). Within a chain a returning sink's output feeds the next
+        # sink (docs/citizens.md:465-496 chained loaders).
+        chains: list[tuple[list[tuple[int, Sink, Callable | None]],
+                           DataFrame]] = []
+        declared: list[Sink] = []
+        load_obs: list[tuple[str, str, Observation]] = []
+
+        def add_chain(sinks: list[Sink], chain_df: DataFrame,
+                      counted: bool) -> None:
+            # one (position, sink, load counter) step per sink; counters
+            # are named here, on the calling thread, so their report
+            # names follow declared order
+            steps = []
+            for sink in sinks:
+                count = (self._stage_counter("load", load_obs)
+                         if counted else None)
+                steps.append((len(declared), sink, count))
+                declared.append(sink)
+            chains.append((steps, chain_df))
+
         if self._sinks:
-            chains.append((list(self._sinks), df, False))
-        n_branch_sinks = 0
+            add_chain(self._sinks, df, self._count_stages)
         executed_branches: list["Pipeline"] = []
         for child in self._branches:
             if child._df is not None:
                 raise PipelineError("branch pipelines must not call from_()")
             if child._sinks:
-                chains.append((list(child._sinks), child._apply_to(df), False))
-                n_branch_sinks += len(child._sinks)
+                add_chain(child._sinks, child._apply_to(df),
+                          self._count_stages)
                 executed_branches.append(child)
-
-        # reject side-streams: independent lineage (captured pre-filter at
-        # their qualify stage), so they neither consume nor justify the
-        # shared-upstream persist below
-        root_actions = len(self._sinks) + n_branch_sinks
+        n_flow_chains, root_actions = len(chains), len(declared)
         reject_obs: list[Observation] = []
         for i, (rej_df, rej_sink) in enumerate(self._reject_chains):
             r_obs = Observation(f"_reject_{i}")
-            chains.append((
-                [rej_sink],
-                rej_df.observe(r_obs, F.count(F.lit(1)).alias("n")),
-                True,
-            ))
+            # reject sinks stay out of num_load — their row count is
+            # already reported as num_rejected
+            add_chain([rej_sink],
+                      rej_df.observe(r_obs, F.count(F.lit(1)).alias("n")),
+                      False)
             reject_obs.append(r_obs)
-        n_actions = root_actions + (0 if root_actions else 1)
-        load_obs: list[tuple[str, str, Observation]] = []
-        persisted = False
-        if n_actions > 1:
+        persisted = root_actions > 1
+        if persisted:
             # shared upstream: extract once, fan out (README.md:219-246)
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted = True
-        all_sinks: list[Sink] = []
-        try:
-            if not root_actions:
-                from .sinks.base import NoOpSink
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+        started: set[int] = set()
+        forced: set[int] = set()
+        errors: dict[int, BaseException] = {}
 
-                NoOpSink().write(df)
-            # register BEFORE writing: a sink whose write fails still gets
-            # its flush('exception') — loaders always see the flow status
-            # at flush time (LoaderAbstract.php:61-87). force_flush sinks
-            # flush right after their own write (YaEtl.php:148-153);
-            # everyone else defers to the root flush in `finally`.
-            for sinks, chain_df, is_reject in chains:
-                cur = chain_df
-                for sink in sinks:
-                    all_sinks.append(sink)
-                    # reject sinks stay out of num_load — their row count
-                    # is already reported as num_rejected
-                    if self._count_stages and not is_reject:
-                        cur = self._stage_counter("load", load_obs)(cur)
-                    ret = sink.write(cur)
-                    if sink.returning and ret is not None:
-                        cur = ret
-                    if sink.force_flush:
-                        all_sinks.remove(sink)
-                        sink.flush(status)
-                        emit("flow.flush", sink=type(sink).__name__,
-                             status=status, forced=True)
+        def flush(sink: Sink, **extra) -> None:
+            with lock:
+                sink.flush(status)
+                emit("flow.flush", sink=type(sink).__name__, status=status,
+                     **extra)
+
+        def write_group(group: list[int]) -> None:
+            # chains sharing a sink or a target run here in declared order;
+            # the group stops at its first failure, like the chain itself
+            for c in group:
+                steps, cur = chains[c]
+                try:
+                    for pos, sink, count in steps:
+                        # registered BEFORE writing: a sink whose write
+                        # fails still gets its flush('exception') — loaders
+                        # always see the flow status (LoaderAbstract.php:
+                        # 61-87). force_flush sinks flush right after their
+                        # own write (YaEtl.php:148-153); everyone else
+                        # defers to the root flush.
+                        started.add(pos)
+                        if count is not None:
+                            cur = count(cur)
+                        ret = sink.write(cur)
+                        if sink.returning and ret is not None:
+                            cur = ret
+                        if sink.force_flush:
+                            forced.add(pos)
+                            flush(sink, forced=True)
+                except BaseException as exc:
+                    errors[c] = exc
+                    return
+
+        groups = _serial_groups(
+            [[sink for _, sink, _ in steps] for steps, _ in chains])
+        try:
+            with ThreadPoolExecutor(max_workers=max(1, len(groups)),
+                                    thread_name_prefix="yaetl-sink") as pool:
+
+                def start(group: list[int]) -> None:
+                    # each target carries its own copy of the caller's
+                    # local properties (job group, pool) and session tags
+                    pool.submit(_inherit(self.spark, write_group), group)
+
+                # a group led by a reject chain holds only rejects: their
+                # own lineage, so they start now
+                for group in groups:
+                    if group[0] >= n_flow_chains:
+                        start(group)
+                if persisted or not root_actions:
+                    # build the shared frame once (or, with no sink, run
+                    # the flow once: a YaEtl flow always executes)
+                    NoOpSink().write(df)
+                for group in groups:
+                    if group[0] < n_flow_chains:
+                        start(group)
+            if errors:
+                raise errors[min(errors)]
             # all writes done → every BreakAt observation has a value; a
             # lazy (self-target) break that actually fired dirties the flow
             if status == "clean":
@@ -551,9 +660,9 @@ class Pipeline:
         finally:
             if progress_stop is not None:
                 progress_stop()
-            for sink in all_sinks:
-                sink.flush(status)
-                emit("flow.flush", sink=type(sink).__name__, status=status)
+            for pos, sink in enumerate(declared):
+                if pos in started and pos not in forced:
+                    flush(sink)
             if persisted:
                 df.unpersist()
         report: dict[str, Any] = {
@@ -612,8 +721,6 @@ class Pipeline:
         """Poll the status tracker on a daemon thread, emitting
         ``flow.progress`` per active stage. Returns a stop() that joins the
         thread. Driver-side observation only — zero executor overhead."""
-        import threading
-
         stop_evt = threading.Event()
         tracker = self.spark.sparkContext.statusTracker()
 

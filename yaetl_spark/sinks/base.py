@@ -29,7 +29,15 @@ class Sink:
     pattern. The returned frame must be deterministic on re-evaluation or
     already materialized (``createDataFrame`` over computed rows, or a
     re-read of the written output): downstream sinks trigger their own
-    actions over it."""
+    actions over it.
+
+    Threads: :meth:`Pipeline.run` calls :meth:`write` on a worker thread,
+    one per independent sink chain, while other chains write. A sink
+    object used in two chains — or two sinks with the same ``path`` or
+    ``table`` attribute — is written from one thread, in declared order,
+    so a subclass that writes elsewhere should expose its target under
+    one of those names. :meth:`flush` and ``on_flush`` hooks never run at
+    the same time as each other or as a run's ``on_event`` callback."""
 
     def __init__(
         self,
