@@ -41,26 +41,47 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
+def session(extra_conf: dict[str, str] | None = None):
+    """The bench session: local[$SPARK_GRAFT_CPUS], one shuffle
+    partition per core; ``extra_conf`` overrides the engine defaults."""
     spark = get_spark(app_name="yaetl-spark-bench", master=f"local[{CPUS}]",
-                      shuffle_partitions=int(CPUS))
+                      shuffle_partitions=int(CPUS), extra_conf=extra_conf)
     spark.sparkContext.setLogLevel("ERROR")
+    # events carries TIMESTAMP(NANOS) which Spark only reads as long
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark
 
-    # Warm the JVM/codegen paths AND the Python UDF workers so per-query
-    # timings measure the engine, not session/interpreter startup.
+
+def warm_up(spark) -> None:
+    """Warm the JVM/codegen paths AND the Python UDF workers so
+    per-query timings measure the engine, not session/interpreter
+    startup."""
     warm = spark.read.parquet(f"{SF_DIR}/region.parquet")
     materialize(warm)
     materialize(
         spark.range(32).mapInPandas(lambda it: it, schema="id long"))
     # file-index + footer + scan-codegen init per table (fixed session
-    # setup, else it lands on whichever query touches a table first);
-    # events carries TIMESTAMP(NANOS) which Spark only reads as long
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # setup, else it lands on whichever query touches a table first)
     for t in entry_mod.TABLES:
         materialize(spark.read.parquet(f"{SF_DIR}/{t}.parquet").limit(1))
     # first sort/TakeOrdered + first driver collect initialize their own
     # codegen + result-serialization paths — warm those too
     warm.orderBy("r_regionkey").limit(1).collect()
+
+
+def runs(fn, n: int) -> list[float]:
+    """Wall times of ``n`` back-to-back calls of ``fn``."""
+    out = []
+    for _ in range(n):
+        t0 = time.monotonic()
+        fn()
+        out.append(time.monotonic() - t0)
+    return out
+
+
+def main() -> None:
+    spark = session()
+    warm_up(spark)
 
     # passthrough anchor: full lineitem scan + noop (BASELINE.md's ~500K
     # records/s/core anchor). Timed FIRST — before ~750 query executions
@@ -73,16 +94,9 @@ def main() -> None:
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     n_rows = li.count()
     materialize(li)  # cold scan (footer/codegen) excluded, like queries
-    pt_runs = []
-    for _ in range(n_warm):
-        t0 = time.monotonic()
-        materialize(li)
-        pt_runs.append(time.monotonic() - t0)
+    pt_runs = runs(lambda: materialize(li), n_warm)
     if min(pt_runs) > 0 and max(pt_runs) > 2.5 * min(pt_runs):
-        for _ in range(n_warm):
-            t0 = time.monotonic()
-            materialize(li)
-            pt_runs.append(time.monotonic() - t0)
+        pt_runs += runs(lambda: materialize(li), n_warm)
     passthrough_sec = statistics.median(pt_runs)
 
     # Each distinct query plan compiles its own whole-stage-codegen class
@@ -115,20 +129,17 @@ def main() -> None:
     # plans only — but are still timed into BENCH_DETAIL.json
     contrast_names = getattr(entry_mod, "BENCH_CONTRAST", frozenset())
     queries = entry_mod.queries()
-    for name, fn in sorted(queries.items()):
+
+    def query(name: str):
+        return lambda: materialize(queries[name](spark, SF_DIR))
+
+    for name in sorted(queries):
         if name in contrast_names:
             continue
-        t0 = time.monotonic()
-        materialize(fn(spark, SF_DIR))
-        timings_cold[name] = round(time.monotonic() - t0, 3)
-        runs = []
-        for _ in range(n_warm):
-            t0 = time.monotonic()
-            materialize(fn(spark, SF_DIR))
-            runs.append(time.monotonic() - t0)
-        runs_all[name] = runs
-        timings[name] = round(statistics.median(runs), 3)
-        spread[name] = [round(min(runs), 3), round(max(runs), 3)]
+        timings_cold[name] = round(runs(query(name), 1)[0], 3)
+        warm = runs_all[name] = runs(query(name), n_warm)
+        timings[name] = round(statistics.median(warm), 3)
+        spread[name] = [round(min(warm), 3), round(max(warm), 3)]
     # Outlier requeue, two triggers, both re-run at the END of the suite
     # (the contention burst has usually passed) with the median recomputed
     # over the UNION of old and new runs — more samples of the truth,
@@ -147,8 +158,8 @@ def main() -> None:
     #     (r9 BENCH_NOTES: category_index 3.79 s suite vs 0.71 s
     #     isolated slipped through).
     requeued_spread = sorted(
-        n for n, runs in runs_all.items()
-        if min(runs) > 0 and max(runs) > 2.5 * min(runs)
+        n for n, warm in runs_all.items()
+        if min(warm) > 0 and max(warm) > 2.5 * min(warm)
     )
     requeued_drift = sorted(
         n for n, med in timings.items()
@@ -157,24 +168,16 @@ def main() -> None:
     )
     requeued = sorted(set(requeued_spread) | set(requeued_drift))
     for name in requeued:
-        runs = runs_all[name]
-        for _ in range(n_warm):
-            t0 = time.monotonic()
-            materialize(queries[name](spark, SF_DIR))
-            runs.append(time.monotonic() - t0)
-        timings[name] = round(statistics.median(runs), 3)
-        spread[name] = [round(min(runs), 3), round(max(runs), 3)]
+        warm = runs_all[name]
+        warm += runs(query(name), n_warm)
+        timings[name] = round(statistics.median(warm), 3)
+        spread[name] = [round(min(warm), 3), round(max(warm), 3)]
     for name in sorted(contrast_names & set(queries)):
         # discard a cold run first, like the headline loop — otherwise
         # the contrast median mixes codegen-compiling and warm runs and
         # isn't comparable round-over-round
-        materialize(queries[name](spark, SF_DIR))
-        runs = []
-        for _ in range(3):
-            t0 = time.monotonic()
-            materialize(queries[name](spark, SF_DIR))
-            runs.append(time.monotonic() - t0)
-        contrast[name] = round(statistics.median(runs), 3)
+        query(name)()
+        contrast[name] = round(statistics.median(runs(query(name), 3)), 3)
 
     total = round(sum(timings.values()), 3)
     passthrough_rps = (

@@ -60,6 +60,16 @@ def test_partitioned_merge_rewrites_only_touched_partition(spark, tmp_path):
         (1, "a", 1.0), (2, "a", 20.0), (3, "b", 3.0), (5, "a", 5.0)}
 
 
+def test_partitioned_merge_of_empty_batch_keeps_target(spark, tmp_path):
+    """An empty batch touches no partition: the merge is a no-op (a flow
+    whose qualify drops every row still runs its partitioned upsert)."""
+    path = str(tmp_path / "tgt")
+    sink = MergeParquetSink(path, keys=["k"], partition_by=["seg"])
+    sink.write(_mk(spark, [(1, "a", 1.0), (3, "b", 3.0)]))
+    sink.write(_mk(spark, []))
+    assert _rows(spark, path) == {(1, "a", 1.0), (3, "b", 3.0)}
+
+
 def test_merge_into_empty_target_is_plain_write(spark, tmp_path):
     path = str(tmp_path / "fresh")
     sink = MergeParquetSink(path, keys=["k"], partition_by=["seg"])

@@ -29,6 +29,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import pandas as _  # noqa: F401  (ensures pandas_udf availability)
 
 
+def as_condition(condition: Column | str) -> Column:
+    """A qualifier condition as a Column: a string is a SQL expression."""
+    return F.expr(condition) if isinstance(condition, str) else condition
+
+
 class Qualifier:
     def apply(self, df: DataFrame) -> DataFrame:
         raise NotImplementedError
@@ -42,12 +47,7 @@ class Predicate(Qualifier):
         self.condition = condition
 
     def apply(self, df: DataFrame) -> DataFrame:
-        cond = (
-            F.expr(self.condition)
-            if isinstance(self.condition, str)
-            else self.condition
-        )
-        return df.filter(cond)
+        return df.filter(as_condition(self.condition))
 
 
 class PandasPredicate(Qualifier):
@@ -87,12 +87,7 @@ class StopWhen(Qualifier):
     def apply(self, df: DataFrame) -> DataFrame:
         out = df
         if self.condition is not None:
-            cond = (
-                F.expr(self.condition)
-                if isinstance(self.condition, str)
-                else self.condition
-            )
-            out = out.filter(~cond)
+            out = out.filter(~as_condition(self.condition))
         if self.max_records is not None:
             out = out.limit(self.max_records)
         return out
@@ -156,8 +151,7 @@ class BreakAt(Qualifier):
         self.target = target
 
     def _cond(self) -> Column:
-        c = self.condition
-        return F.expr(c) if isinstance(c, str) else c
+        return as_condition(self.condition)
 
     def _order(self) -> Column:
         o = self.order_by
@@ -245,11 +239,7 @@ class ContinueAt(Qualifier):
     def apply(self, df: DataFrame) -> DataFrame:
         from pyspark.sql.window import Window
 
-        cond = (
-            F.expr(self.condition)
-            if isinstance(self.condition, str)
-            else self.condition
-        )
+        cond = as_condition(self.condition)
         order = (
             F.col(self.order_by)
             if isinstance(self.order_by, str)

@@ -44,7 +44,7 @@ from pyspark.storagelevel import StorageLevel
 from pyspark.util import inheritable_thread_target
 
 from .operators.joins import OnClause, join as _join
-from .operators.qualifiers import Predicate, Qualifier
+from .operators.qualifiers import Predicate, Qualifier, as_condition
 from .operators.transformers import Apply, Transformer
 from .sinks.base import NoOpSink, Sink
 from .sources.base import DataFrameSource, Source
@@ -342,7 +342,7 @@ class Pipeline:
                 if callable(raw) and not isinstance(raw, Column):
                     cond = raw(df)
                 else:
-                    cond = F.expr(raw) if isinstance(raw, str) else raw
+                    cond = as_condition(raw)
                 if reject_to is not None:
                     # filter(cond) keeps TRUE rows; the complement (FALSE
                     # or NULL) is exactly what this captures

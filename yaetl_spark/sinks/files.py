@@ -339,17 +339,20 @@ class MergeParquetSink(Sink):
             writer.parquet(self.path)
             return
 
-        existing = spark.read.parquet(self.path)
+        pred = None
         if self.partition_by:
             # prune the existing side to the partitions the batch touches
             touched = df.select(*self.partition_by).distinct().collect()
-            pred = None
+            if not touched:
+                return  # empty batch: no partition to upsert or delete in
             for row in touched:
                 clause = None
                 for c in self.partition_by:
                     eq = F.col(c) == F.lit(row[c])
                     clause = eq if clause is None else (clause & eq)
                 pred = clause if pred is None else (pred | clause)
+        existing = spark.read.parquet(self.path)
+        if pred is not None:
             existing = existing.filter(pred)
 
         kept = existing.join(

@@ -13,11 +13,12 @@ oracle in batch mode and run unchanged as a stream.
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.qualifiers import as_condition
 from ..session import epoch_seconds, is_ntz, to_instant
 
 
@@ -30,6 +31,33 @@ def _watermarkable(df: DataFrame, time_col: str) -> DataFrame:
     if df.isStreaming and is_ntz(df, time_col):
         return df.withColumn(time_col, to_instant(time_col))
     return df
+
+
+def _window_agg(
+    df: DataFrame,
+    time_col: str,
+    window: Column,
+    aggs: Sequence[Column],
+    extra_keys: list[str] | None,
+    watermark: str | None,
+) -> DataFrame:
+    """Group ``df`` by ``window`` (plus ``extra_keys``); the window
+    bounds come out as ``window_start``/``window_end`` epoch seconds."""
+    df = _watermarkable(df, time_col)
+    if watermark and df.isStreaming:
+        df = df.withWatermark(time_col, watermark)
+    keys = [window.alias("_w")] + [F.col(k) for k in (extra_keys or [])]
+    out = df.groupBy(*keys).agg(*aggs)
+    # epoch_seconds (not unix_timestamp): window bounds inherit the
+    # input's type, and for the engine's canonical NTZ event time a
+    # session-tz cast would shift every epoch under a non-UTC driver
+    # session (the r10 verdict's reproduced hazard)
+    ntz = is_ntz(df, time_col)
+    return out.select(
+        epoch_seconds(F.col("_w.start"), ntz=ntz).alias("window_start"),
+        epoch_seconds(F.col("_w.end"), ntz=ntz).alias("window_end"),
+        *[c for c in out.columns if c != "_w"],
+    )
 
 
 def tumbling_window_agg(
@@ -46,23 +74,8 @@ def tumbling_window_agg(
     result is engine-portable (timestamps hash differently across engines;
     integers don't).
     """
-    df = _watermarkable(df, time_col)
-    if watermark and df.isStreaming:
-        df = df.withWatermark(time_col, watermark)
-    keys = [F.window(F.col(time_col), duration).alias("_w")] + [
-        F.col(k) for k in (extra_keys or [])
-    ]
-    out = df.groupBy(*keys).agg(*aggs)
-    # epoch_seconds (not unix_timestamp): window bounds inherit the
-    # input's type, and for the engine's canonical NTZ event time a
-    # session-tz cast would shift every epoch under a non-UTC driver
-    # session (the r10 verdict's reproduced hazard)
-    ntz = is_ntz(df, time_col)
-    return out.select(
-        epoch_seconds(F.col("_w.start"), ntz=ntz).alias("window_start"),
-        epoch_seconds(F.col("_w.end"), ntz=ntz).alias("window_end"),
-        *[c for c in out.columns if c != "_w"],
-    )
+    return _window_agg(df, time_col, F.window(F.col(time_col), duration),
+                       aggs, extra_keys, watermark)
 
 
 def sliding_window_agg(
@@ -74,23 +87,9 @@ def sliding_window_agg(
     extra_keys: list[str] | None = None,
     watermark: str | None = None,
 ) -> DataFrame:
-    df = _watermarkable(df, time_col)
-    if watermark and df.isStreaming:
-        df = df.withWatermark(time_col, watermark)
-    keys = [F.window(F.col(time_col), duration, slide).alias("_w")] + [
-        F.col(k) for k in (extra_keys or [])
-    ]
-    out = df.groupBy(*keys).agg(*aggs)
-    # epoch_seconds (not unix_timestamp): window bounds inherit the
-    # input's type, and for the engine's canonical NTZ event time a
-    # session-tz cast would shift every epoch under a non-UTC driver
-    # session (the r10 verdict's reproduced hazard)
-    ntz = is_ntz(df, time_col)
-    return out.select(
-        epoch_seconds(F.col("_w.start"), ntz=ntz).alias("window_start"),
-        epoch_seconds(F.col("_w.end"), ntz=ntz).alias("window_end"),
-        *[c for c in out.columns if c != "_w"],
-    )
+    return _window_agg(df, time_col,
+                       F.window(F.col(time_col), duration, slide),
+                       aggs, extra_keys, watermark)
 
 
 def session_window_agg(
@@ -102,23 +101,9 @@ def session_window_agg(
     watermark: str | None = None,
 ) -> DataFrame:
     """Session windows (gap-based); streaming requires a watermark."""
-    df = _watermarkable(df, time_col)
-    if watermark and df.isStreaming:
-        df = df.withWatermark(time_col, watermark)
-    keys = [F.session_window(F.col(time_col), gap).alias("_w")] + [
-        F.col(k) for k in (extra_keys or [])
-    ]
-    out = df.groupBy(*keys).agg(*aggs)
-    # epoch_seconds (not unix_timestamp): window bounds inherit the
-    # input's type, and for the engine's canonical NTZ event time a
-    # session-tz cast would shift every epoch under a non-UTC driver
-    # session (the r10 verdict's reproduced hazard)
-    ntz = is_ntz(df, time_col)
-    return out.select(
-        epoch_seconds(F.col("_w.start"), ntz=ntz).alias("window_start"),
-        epoch_seconds(F.col("_w.end"), ntz=ntz).alias("window_end"),
-        *[c for c in out.columns if c != "_w"],
-    )
+    return _window_agg(df, time_col,
+                       F.session_window(F.col(time_col), gap),
+                       aggs, extra_keys, watermark)
 
 
 def dedup_within_watermark(
@@ -249,9 +234,6 @@ def stream_psi(
         for i in range(1, bins + 1)
     ]
     # ---- the (batch- and stream-compatible) windowed score ----
-    df = _watermarkable(df, time_col)
-    if watermark and df.isStreaming:
-        df = df.withWatermark(time_col, watermark)
     val = F.col(value_col).cast("double")
     cuts_arr = F.array(*[F.lit(float(c)) for c in cuts])
     binned = df.filter(F.col(value_col).isNotNull()).withColumn(
@@ -263,9 +245,8 @@ def stream_psi(
         .cast("bigint").alias(f"_mb{i}")
         for i in range(1, bins + 1)
     ]
-    out = binned.groupBy(
-        F.window(F.col(time_col), duration).alias("_w")
-    ).agg(*aggs)
+    out = _window_agg(binned, time_col, F.window(F.col(time_col), duration),
+                      aggs, None, watermark)
     n = F.col("n_events").cast("double")
     terms = []
     for i in range(1, bins + 1):
@@ -289,13 +270,8 @@ def stream_psi(
     psi = terms[0]
     for t in terms[1:]:
         psi = psi + t
-    ntz = is_ntz(df, time_col)
-    return out.select(
-        epoch_seconds(F.col("_w.start"), ntz=ntz).alias("window_start"),
-        epoch_seconds(F.col("_w.end"), ntz=ntz).alias("window_end"),
-        F.col("n_events"),
-        psi.cast("double").alias("psi"),
-    )
+    return out.select("window_start", "window_end", "n_events",
+                      psi.cast("double").alias("psi"))
 
 
 def stream_minhash_probe(
@@ -628,8 +604,7 @@ class StreamPipeline:
         return self
 
     def qualify(self, cond: Column | str) -> "StreamPipeline":
-        cond = F.expr(cond) if isinstance(cond, str) else cond
-        self._df = self._df.filter(cond)
+        self._df = self._df.filter(as_condition(cond))
         return self
 
     @property
