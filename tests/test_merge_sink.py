@@ -60,6 +60,18 @@ def test_partitioned_merge_rewrites_only_touched_partition(spark, tmp_path):
         (1, "a", 1.0), (2, "a", 20.0), (3, "b", 3.0), (5, "a", 5.0)}
 
 
+def test_partitioned_merge_keeps_rows_of_null_partition(spark, tmp_path):
+    """A NULL partition value (the __HIVE_DEFAULT_PARTITION__ directory)
+    is pruned null-safely: the untouched keys of that partition survive
+    an upsert into it."""
+    path = str(tmp_path / "tgt")
+    sink = MergeParquetSink(path, keys=["k"], partition_by=["seg"])
+    sink.write(_mk(spark, [(1, None, 1.0), (2, None, 2.0), (3, "b", 3.0)]))
+    sink.write(_mk(spark, [(2, None, 20.0)]))
+    assert _rows(spark, path) == {
+        (1, None, 1.0), (2, None, 20.0), (3, "b", 3.0)}
+
+
 def test_partitioned_merge_of_empty_batch_keeps_target(spark, tmp_path):
     """An empty batch touches no partition: the merge is a no-op (a flow
     whose qualify drops every row still runs its partitioned upsert)."""

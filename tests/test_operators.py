@@ -133,6 +133,55 @@ def test_minhash_probe_rolling_mode_oracle_family(spark):
     assert got == want and got  # non-empty: the ws/case dup crosses
 
 
+@pytest.mark.parametrize("mode", ["word", "char"])
+def test_minhash_index_rolling_signatures_match_python_reference(spark, mode):
+    """hash_fn='rolling' signatures equal a pure-Python MinHash: the same
+    shingles (word n-grams of the [^a-z0-9]+ tokens, or char n-grams of
+    the whitespace/case-normalized text), the 31-bit polynomial shingle
+    hash and the _hash_coeffs31 slot family, min per slot."""
+    import re
+
+    from yaetl_spark.operators import minhash_index
+    from yaetl_spark.operators.dedup import _MERSENNE31, _hash_coeffs31
+
+    rows = [
+        (1, "The quick brown fox jumps over the lazy dog"),
+        (2, "  the QUICK,brown   fox -- jumps!"),
+        (3, "ab"),
+        (4, "Spark 4.0 ships ANSI mode on by default"),
+    ]
+    size, nh = 3, 16
+
+    def grams(text):
+        if mode == "word":
+            toks = [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
+            if len(toks) < size:
+                return {" ".join(toks)}
+            return {" ".join(toks[i:i + size])
+                    for i in range(len(toks) - size + 1)}
+        norm = re.sub(r"\s+", " ", text).strip().lower()
+        return {norm[i:i + size] for i in range(len(norm) - size + 1)}
+
+    def roll(s):
+        h = 0
+        for ch in s:
+            h = (h * 31 + ord(ch)) % _MERSENNE31
+        return h
+
+    def sig(text):
+        hs = [roll(g) for g in grams(text)]
+        return [min([(a * h + b) % _MERSENNE31 for h in hs],
+                    default=_MERSENNE31)
+                for a, b in _hash_coeffs31(nh, 42)]
+
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    idx = minhash_index(docs, num_hashes=nh, bands=4, shingle_size=size,
+                        shingle_mode=mode, hash_fn="rolling")
+    got = {r["doc_id"]: list(r["sig"])
+           for r in idx.select("doc_id", "sig").distinct().collect()}
+    assert got == {i: sig(t) for i, t in rows}
+
+
 def test_simhash_dedup_collapses_exact_dups(spark):
     out = sorted(r["doc_id"] for r in simhash_dedup(_docs(spark)).collect())
     assert 1 in out and 4 in out and 2 not in out and 5 not in out

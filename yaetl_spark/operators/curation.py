@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .sampling import hash_bucket, hash_bucket_str
-from .text import LANG_MARKERS, punct_ratio, token_count
+from .text import LANG_MARKERS, normalize_ws, punct_ratio, token_count
 
 __all__ = [
     "attach_scalars",
@@ -696,7 +696,7 @@ def gopher_quality_flags(
     """
     t = F.col(text_col)
     n_tok = token_count(t)
-    norm = F.trim(F.regexp_replace(t, r"\s+", " "))
+    norm = normalize_ws(t)
     n_word_chars = F.length(F.replace(norm, F.lit(" "), F.lit("")))
     mean_wl = F.when(n_tok == 0, F.lit(0.0)).otherwise(
         n_word_chars.cast("double") / n_tok.cast("double")

@@ -7,16 +7,24 @@ All variants are designed for the 100 TB path:
 - :func:`minhash_lsh` — shingle → minhash signature → banding → bucket
   join. The candidate join is an equi join on (band, band_hash) so Catalyst
   shuffles both sides on the bucket key — never an all-pairs product.
-- :func:`simhash` — 64-bit SimHash per doc via array fold (collect token
-  hashes per doc, zip_with-accumulate bit counts); near-dup = identical
-  signature (or banded Hamming buckets).
+  :func:`minhash_index` / :func:`minhash_probe` split it into a persisted
+  corpus index and incremental probes, :func:`shard_minhash_dedup` runs it
+  over whole shards. All of them share one MinHash core — one signature
+  fold (:func:`_signature_frame`), one banding (:func:`_banded_signatures`),
+  one slot-agreement verify (:func:`_verified`) and one probe join
+  (:func:`_probe_candidates`), the streaming probe included.
+- :func:`simhash_dedup` — 64-bit SimHash per doc from per-bit sums over
+  exploded shingle hashes (:func:`simhash_signatures`); near-dup =
+  identical signature.
 - :func:`ngram_jaccard_pairs` — exact Jaccard over character shingles for
   a candidate pair set (used to verify LSH candidates).
 - :func:`embedding_dedup_pairs` — cosine near-dup over embedding vectors,
   bucketed by random-hyperplane signs (LSH) to avoid the quadratic join.
 
-Everything is built-in Column expressions (xxhash64, transform, aggregate,
-zip_with) — JVM-side, no Python in the hot path.
+Everything is built-in Spark expressions (xxhash64, transform, aggregate,
+zip_with), built as Columns or parsed from SQL text where a Column build
+would cost hundreds of driver round trips — JVM-side, no Python in the
+hot path.
 """
 
 from __future__ import annotations
@@ -24,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import char_ngrams
+from .text import TOKEN_SPLIT, char_ngrams
 
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -111,127 +119,78 @@ def shingles(
     return let_once(tokenize(text), grams)
 
 
-def minhash_signature(
-    text: Column,
-    num_hashes: int = 64,
-    shingle_size: int = 3,
-    seed: int = 42,
-    shingle_mode: str = "word",
-    hash_fn: str = "xxhash",
-) -> Column:
-    """MinHash signature (array<bigint>, length ``num_hashes``).
+def _slot_hash(hash_fn: str, seed: int, h: str, slot) -> str:
+    """Slot ``slot``'s MinHash re-mix of the element hash ``h``, as SQL
+    text — the one definition of the per-slot hash family.
 
-    ``hash_fn='xxhash'`` (production): slot ``i`` is
-    ``min(xxhash64(seed, i, xxhash64(shingle)))`` — an independent
-    64-bit re-mix per slot, NO modular arithmetic at all, so an ANSI
-    session can never overflow-throw (the previous
+    ``hash_fn='xxhash'`` (production): ``xxhash64(seed, i, h)`` — an
+    independent 64-bit re-mix per slot, NO modular arithmetic at all,
+    so an ANSI session can never overflow-throw (the previous
     ``(a*h + b) mod 2^61-1`` family relied on deliberate signed-64
     wrap, which Spark 4 ANSI rejects — r9 adversarial sweep).
-    ``hash_fn='rolling'`` (oracle mode): 31-bit polynomial shingle hashes
-    + a 16-bit-coefficient family — every operation exact in int64, so
-    plain SQL (DuckDB) reproduces the signatures bit-for-bit.
-    Computed as ONE fold over the shingle-hash array with an array-of-
-    minima accumulator, so the shingle construction runs exactly once per
-    row regardless of ``num_hashes``.
-    """
-    sh = shingles(text, shingle_mode, shingle_size)
+    ``hash_fn='rolling'`` (oracle mode): ``pmod(a*h + b, 2^31-1)`` with
+    the 16-bit-coefficient :func:`_hash_coeffs31` family over 31-bit
+    element hashes — every operation exact in int64, so plain SQL
+    (DuckDB) reproduces the signatures bit-for-bit. ``slot`` is the
+    slot index (xxhash) or its ``(a, b)`` coefficients (rolling), as
+    literals or as the fold's lambda variables."""
     if hash_fn == "rolling":
-        hashes = F.transform(sh, lambda s: rolling_hash_raw(s))
-        coeffs = _hash_coeffs31(num_hashes, seed)
-        # one parsed literal array instead of 3·num_hashes Column calls
-        # (driver round-trip cost — see the xxhash branch note). Fields
-        # are int like the F.lit originals (a < 2^16, b < 2^31), and
-        # the pmod arithmetic widens to bigint identically.
-        coeff_arr = F.expr(
-            "array({})".format(",".join(
-                f"named_struct('a',{a},'b',{b})" for a, b in coeffs
-            ))
-        )
-        init = F.expr(
-            f"array_repeat(cast({_MERSENNE31} as bigint), {num_hashes})")
-        return F.aggregate(
-            hashes,
-            init,
-            lambda acc, h: F.zip_with(
-                acc,
-                coeff_arr,
-                lambda m, c: F.least(
-                    m,
-                    F.pmod(
-                        c.getField("a") * h + c.getField("b"),
-                        F.lit(_MERSENNE31),
-                    ),
-                ),
-            ),
-        )
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    # constant fragments parse as ONE SQL expression each instead of
-    # num_hashes small Column calls (a Python->JVM round trip per call;
-    # see the guide-§7.3 note in timeseries.autocorrelation) — same
-    # literal arrays, same types
-    slot_idx = F.expr(
-        "array({})".format(",".join(str(i) for i in range(num_hashes))))
-    init = F.expr(
-        f"array_repeat(cast({(1 << 63) - 1} as bigint), {num_hashes})")
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            slot_idx,
-            lambda m, i: F.least(m, F.xxhash64(F.lit(seed), i, h)),
-        ),
-    )
+        a, b = slot
+        return f"pmod({a} * {h} + {b}, {_MERSENNE31})"
+    return f"xxhash64({seed}, {slot}, {h})"
 
 
-def _minhash_signature_sql(
-    text_sql: str,
-    num_hashes: int,
-    shingle_size: int,
-    seed: int,
-    shingle_mode: str,
-    hash_fn: str,
-) -> str:
-    """:func:`minhash_signature` as ONE SQL string over ``text_sql`` —
-    the signature pipeline is ~400 Column calls when built node by node
-    (a Python→JVM round trip each; see stats._dsum_sql), one parse
-    here. Arithmetic is identical operation for operation: tokenize →
-    shingle (word mode; char mode keeps the Column path) → per-shingle
-    hash → slot-minimum fold; pinned by the minhash/probe oracle and
-    equivalence tests."""
-    size = shingle_size
-    toks = f"filter(split(lower({text_sql}), '[^a-z0-9]+'), t -> t != '')"
+def _slots(num_hashes: int, seed: int, hash_fn: str) -> list:
+    """The per-slot ``slot`` arguments of :func:`_slot_hash`."""
+    if hash_fn == "rolling":
+        return _hash_coeffs31(num_hashes, seed)
+    return list(range(num_hashes))
+
+
+def _word_shingles_sql(text_sql: str, size: int) -> str:
+    """:func:`shingles` word mode as ONE SQL string over ``text_sql``:
+    the :func:`~yaetl_spark.operators.text.tokenize` split, its token
+    array bound once, distinct ``size``-grams joined by spaces."""
+    toks = f"filter(split(lower({text_sql}), '{TOKEN_SPLIT}'), t -> t != '')"
     grams = (
         f"array_distinct(case when size(t) < {size} "
         f"then array(concat_ws(' ', t)) "
         f"else transform(sequence(1, size(t) - {size - 1}), "
         f"i -> concat_ws(' ', slice(t, i, {size}))) end)"
     )
-    sh = f"get(transform(array({toks}), t -> {grams}), 0)"
+    return f"get(transform(array({toks}), t -> {grams}), 0)"
+
+
+def _signature_fold_sql(
+    sh: str, num_hashes: int, seed: int, hash_fn: str
+) -> str:
+    """The MinHash signature (array<bigint>, length ``num_hashes``) of
+    the shingle array ``sh``, as SQL text: hash each shingle once
+    (``xxhash64``, or :func:`rolling_hash_raw`'s 31-bit polynomial),
+    then ONE fold with an array-of-minima accumulator taking every
+    slot's :func:`_slot_hash`, so the shingle construction runs once
+    per row regardless of ``num_hashes``. The slot parameters are one
+    literal array — a single parse instead of ~400 Column calls (a
+    Python→JVM round trip each; see stats._dsum_sql)."""
     if hash_fn == "rolling":
-        roll = (
+        h = (
             "case when length(s) = 0 then cast(0 as bigint) else "
             "aggregate(transform(sequence(1, length(s)), "
             "i -> cast(ascii(substr(s, i, 1)) as bigint)), "
             "cast(0 as bigint), "
             f"(h, c) -> pmod(h * 31 + c, {_MERSENNE31})) end"
         )
-        coeffs = _hash_coeffs31(num_hashes, seed)
-        coeff_arr = "array({})".format(",".join(
-            f"named_struct('a',{a},'b',{b})" for a, b in coeffs))
-        return (
-            f"aggregate(transform({sh}, s -> {roll}), "
-            f"array_repeat(cast({_MERSENNE31} as bigint), {num_hashes}), "
-            f"(acc, h) -> zip_with(acc, {coeff_arr}, "
-            f"(m, c) -> least(m, pmod(c.a * h + c.b, {_MERSENNE31}))))"
-        )
-    slot_idx = "array({})".format(",".join(
-        str(i) for i in range(num_hashes)))
+        top, var, slot = _MERSENNE31, "c", ("c.a", "c.b")
+        params = [f"named_struct('a',{a},'b',{b})"
+                  for a, b in _slots(num_hashes, seed, hash_fn)]
+    else:
+        h, top, var, slot = "xxhash64(s)", (1 << 63) - 1, "i", "i"
+        params = [str(i) for i in _slots(num_hashes, seed, hash_fn)]
     return (
-        f"aggregate(transform({sh}, s -> xxhash64(s)), "
-        f"array_repeat(cast({(1 << 63) - 1} as bigint), {num_hashes}), "
-        f"(acc, h) -> zip_with(acc, {slot_idx}, "
-        f"(m, i) -> least(m, xxhash64({seed}, i, h))))"
+        f"aggregate(transform({sh}, s -> {h}), "
+        f"array_repeat(cast({top} as bigint), {num_hashes}), "
+        f"(acc, h) -> zip_with(acc, array({','.join(params)}), "
+        f"(m, {var}) -> least(m, {_slot_hash(hash_fn, seed, 'h', slot)})))"
     )
 
 
@@ -244,28 +203,28 @@ def _signature_frame(
     seed: int,
     shingle_mode: str,
     hash_fn: str,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """``(_id, _sig)`` signature table shared by the LSH operators.
-    Word mode routes through :func:`_minhash_signature_sql` (one parse
-    instead of ~400 Column round trips; the projection of the text to
-    a fixed internal name collapses in the optimizer); char mode keeps
-    the Column path."""
-    if shingle_mode == "word":
-        sig_sql = _minhash_signature_sql(
-            "_mh_t", num_hashes, shingle_size, seed, shingle_mode,
-            hash_fn)
-        return df.select(
-            F.col(id_col).alias("_id"),
-            F.col(text_col).alias("_mh_t"),
-        ).select(
-            "_id", F.expr(sig_sql).alias("_sig")
-        ).filter(F.size("_sig") > 0)
+    """``(*carry, _id, _sig)``: the one MinHash signature builder of
+    the LSH operators, :func:`_signature_fold_sql` over the shingles.
+    Word mode shingles in SQL too (:func:`_word_shingles_sql` over the
+    text projected to a fixed internal name, which collapses in the
+    optimizer); char mode folds :func:`shingles`' Column, named
+    ``_sh``. ``carry`` names extra ``df`` columns to ride along
+    unchanged (the streaming probe threads its event time through).
+    Rows with no signature (NULL text) are dropped."""
+    if shingle_mode == "char":
+        sh = "_sh"
+        src = shingles(F.col(text_col), shingle_mode, shingle_size).alias(sh)
+    else:
+        sh = _word_shingles_sql("_mh_t", shingle_size)
+        src = F.col(text_col).alias("_mh_t")
     return df.select(
-        F.col(id_col).alias("_id"),
-        minhash_signature(
-            F.col(text_col), num_hashes, shingle_size, seed,
-            shingle_mode, hash_fn,
-        ).alias("_sig"),
+        *carry, F.col(id_col).alias("_id"), src,
+    ).select(
+        *carry, "_id",
+        F.expr(_signature_fold_sql(sh, num_hashes, seed, hash_fn))
+        .alias("_sig"),
     ).filter(F.size("_sig") > 0)
 
 
@@ -298,9 +257,8 @@ def minhash_lsh(
     sigs = _signature_frame(
         df, text_col, id_col, num_hashes, shingle_size, seed,
         shingle_mode, hash_fn)
-    return _lsh_band_pairs(
-        sigs, num_hashes, bands, hash_fn, jaccard_threshold, "jaccard_sim"
-    )
+    return _lsh_band_pairs(sigs, num_hashes, bands, hash_fn,
+                           jaccard_threshold)
 
 
 def _lsh_band_pairs(
@@ -309,23 +267,12 @@ def _lsh_band_pairs(
     bands: int,
     hash_fn: str,
     jaccard_threshold: float | None,
-    sim_col: str,
 ) -> DataFrame:
     """Banding + candidate join + slot-agreement verify over a
     ``(_id, _sig)`` signature table — steps 2-4 of the LSH pipeline,
     shared by the per-document (:func:`minhash_lsh`) and per-shard
     (:func:`shard_minhash_dedup`) operators."""
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
-
-    banded = sigs.select(
-        "_id",
-        "_sig",
-        F.explode(
-            _band_bucket_expr(num_hashes, bands, hash_fn)
-        ).alias("_bucket"),
-    ).select("_id", "_sig", "_bucket.band", "_bucket.bhash")
-
+    banded = _banded_signatures(sigs, num_hashes, bands, hash_fn)
     a = banded.alias("a")
     b = banded.alias("b")
     candidates = (
@@ -343,64 +290,106 @@ def _lsh_band_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-
-    sim = F.expr(
-        "cast(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), "
-        f"eq -> eq)) as double) / {float(num_hashes)!r}D"
-    )
-    out = candidates.select(
-        "id_a", "id_b", F.round(sim, 6).alias(sim_col)
-    )
-    if jaccard_threshold is not None:
-        out = out.filter(F.col(sim_col) >= jaccard_threshold)
-    return out
-
-
-def _band_bucket_expr(num_hashes: int, bands: int, hash_fn: str):
-    """The band-key explosion array over the internal ``_sig`` column:
-    ``transform(sequence(0, bands-1), b -> struct(band, bhash))`` with
-    the per-band slot-slice key. rolling/oracle mode keeps the raw slot
-    string (SQL-replicable); production mode hashes it down to 8 bytes
-    for a cheaper shuffle. ONE shared definition consumed by both
-    :func:`_lsh_band_pairs` and :func:`_banded_signatures` (their
-    arithmetic identity is pinned by ``tests/test_operators.py::
-    test_minhash_probe_matches_lsh_cross_pairs``), parsed as a single
-    SQL expression instead of ~10 Column calls per band (driver
-    round-trip cost — see timeseries.autocorrelation)."""
-    rpb = num_hashes // bands
-    slot_str = (
-        f"concat_ws(',', transform(slice(_sig, b * {rpb} + 1, {rpb}), "
-        "x -> cast(x as string)))"
-    )
-    key = slot_str if hash_fn == "rolling" else f"xxhash64({slot_str})"
-    return F.expr(
-        f"transform(sequence(0, {bands - 1}), "
-        f"b -> named_struct('band', b, 'bhash', {key}))"
-    )
+    return _verified(candidates, ["id_a", "id_b"], "sig_a", "sig_b",
+                     num_hashes, jaccard_threshold)
 
 
 def _banded_signatures(
     sigs: DataFrame, num_hashes: int, bands: int, hash_fn: str,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """``(_id, _sig)`` → ``(_id, _sig, band, bhash)``: the band-key
-    explosion, arithmetic-identical to :func:`_lsh_band_pairs`' (both
-    consume :func:`_band_bucket_expr`; the equivalence is pinned by
-    ``tests/test_operators.py::test_minhash_probe_matches_lsh_cross_pairs``).
-    ``carry`` names extra ``sigs`` columns to ride along unchanged
-    (the streaming probe threads its event-time column through); the
-    default () path selects exactly what it always did."""
+    """``(*carry, _id, _sig)`` → ``(*carry, _id, _sig, band, bhash)``:
+    the one band-key explosion of the LSH operators, keyed by each
+    band's slot slice. rolling/oracle mode keeps the raw slot string
+    (SQL-replicable); production mode hashes it down to 8 bytes for a
+    cheaper shuffle. Parsed as a single SQL expression instead of ~10
+    Column calls per band (driver round-trip cost — see
+    timeseries.autocorrelation). ``carry`` columns ride along
+    unchanged."""
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
-
+    rpb = num_hashes // bands
+    slot_str = (
+        f"concat_ws(',', transform(slice(_sig, b * {rpb} + 1, {rpb}), "
+        "x -> cast(x as string)))"
+    )
+    key = slot_str if hash_fn == "rolling" else f"xxhash64({slot_str})"
+    buckets = F.expr(
+        f"transform(sequence(0, {bands - 1}), "
+        f"b -> named_struct('band', b, 'bhash', {key}))"
+    )
     return sigs.select(
-        *carry,
-        "_id",
-        "_sig",
-        F.explode(
-            _band_bucket_expr(num_hashes, bands, hash_fn)
-        ).alias("_bucket"),
+        *carry, "_id", "_sig", F.explode(buckets).alias("_bucket"),
     ).select(*carry, "_id", "_sig", "_bucket.band", "_bucket.bhash")
+
+
+def _verified(
+    pairs: DataFrame,
+    keep: list[str],
+    sig_a: str,
+    sig_b: str,
+    num_hashes: int,
+    jaccard_threshold: float | None,
+) -> DataFrame:
+    """``keep`` columns plus ``jaccard_sim``: the estimated Jaccard of each
+    candidate pair — the fraction of agreeing signature slots, rounded
+    to 6 places — kept at or above ``jaccard_threshold`` when given."""
+    sim = F.expr(
+        f"cast(size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y), "
+        f"eq -> eq)) as double) / {float(num_hashes)!r}D"
+    )
+    out = pairs.select(*keep, F.round(sim, 6).alias("jaccard_sim"))
+    if jaccard_threshold is not None:
+        out = out.filter(F.col("jaccard_sim") >= jaccard_threshold)
+    return out
+
+
+def _probe_candidates(
+    index: DataFrame,
+    incoming: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_size: int,
+    seed: int,
+    shingle_mode: str,
+    hash_fn: str,
+    index_id_col: str,
+    exclude_same_id: bool,
+    broadcast_probe: bool = False,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(*carry, probe_id, index_id, sig_p, sig_i)``: ``incoming``
+    signatured and banded like the index, bucket-joined against it on
+    ``(band, bhash)`` — one row per band hit, so a pair sharing several
+    bands repeats (each caller dedupes where its execution mode wants
+    it). Shared by :func:`minhash_probe` and the streaming probe."""
+    sigs = _signature_frame(
+        incoming, text_col, id_col, num_hashes, shingle_size, seed,
+        shingle_mode, hash_fn, carry)
+    banded = _banded_signatures(sigs, num_hashes, bands, hash_fn, carry)
+    probe_side = banded.select(
+        *carry,
+        F.col("_id").alias("_p_id"),
+        F.col("_sig").alias("_p_sig"),
+        F.col("band").alias("_p_band"),
+        F.col("bhash").alias("_p_bhash"),
+    )
+    if broadcast_probe:
+        probe_side = F.broadcast(probe_side)
+    cond = (F.col("_p_band") == F.col("band")) & (
+        F.col("_p_bhash") == F.col("bhash")
+    )
+    if exclude_same_id:
+        cond = cond & (F.col("_p_id") != F.col(index_id_col))
+    return probe_side.join(index, cond).select(
+        *carry,
+        F.col("_p_id").alias("probe_id"),
+        F.col(index_id_col).alias("index_id"),
+        F.col("_p_sig").alias("sig_p"),
+        F.col("sig").alias("sig_i"),
+    )
 
 
 def minhash_index(
@@ -482,43 +471,13 @@ def minhash_probe(
     :func:`minhash_lsh` on the shard for those — same signatures,
     composable by construction).
     """
-    sigs = _signature_frame(
-        incoming, text_col, id_col, num_hashes, shingle_size, seed,
-        shingle_mode, hash_fn)
-    banded = _banded_signatures(sigs, num_hashes, bands, hash_fn)
-    probe_side = banded.select(
-        F.col("_id").alias("_p_id"),
-        F.col("_sig").alias("_p_sig"),
-        F.col("band").alias("_p_band"),
-        F.col("bhash").alias("_p_bhash"),
-    )
-    if broadcast_probe:
-        probe_side = F.broadcast(probe_side)
-    cond = (F.col("_p_band") == F.col("band")) & (
-        F.col("_p_bhash") == F.col("bhash")
-    )
-    if exclude_same_id:
-        cond = cond & (F.col("_p_id") != F.col(index_id_col))
-    candidates = (
-        probe_side.join(index, cond)
-        .select(
-            F.col("_p_id").alias("probe_id"),
-            F.col(index_id_col).alias("index_id"),
-            F.col("_p_sig").alias("sig_p"),
-            F.col("sig").alias("sig_i"),
-        )
-        .dropDuplicates(["probe_id", "index_id"])
-    )
-    sim = F.expr(
-        "cast(size(filter(zip_with(sig_p, sig_i, (x, y) -> x = y), "
-        f"eq -> eq)) as double) / {float(num_hashes)!r}D"
-    )
-    out = candidates.select(
-        "probe_id", "index_id", F.round(sim, 6).alias("jaccard_sim")
-    )
-    if jaccard_threshold is not None:
-        out = out.filter(F.col("jaccard_sim") >= jaccard_threshold)
-    return out
+    candidates = _probe_candidates(
+        index, incoming, text_col, id_col, num_hashes, bands, shingle_size,
+        seed, shingle_mode, hash_fn, index_id_col, exclude_same_id,
+        broadcast_probe,
+    ).dropDuplicates(["probe_id", "index_id"])
+    return _verified(candidates, ["probe_id", "index_id"], "sig_p",
+                     "sig_i", num_hashes, jaccard_threshold)
 
 
 def shard_minhash_dedup(
@@ -548,7 +507,7 @@ def shard_minhash_dedup(
     ``element`` picks what a shard is a set OF:
 
     - ``"token"``: the shard's pooled shingle vocabulary — per-doc
-      MinHash signatures (the :func:`minhash_signature` machinery)
+      MinHash signatures (the :func:`minhash_lsh` slot family)
       min-merged per shard. Sound because MinHash is a min-union
       sketch: slotwise ``min`` over members IS the signature of the
       union of their shingle sets.
@@ -582,67 +541,46 @@ def shard_minhash_dedup(
     """
     if element not in ("token", "content"):
         raise ValueError("element must be 'token' or 'content'")
+    # hash each element ONCE into a named column ``_gh``, then derive
+    # the per-slot re-mixes from it via one parsed expression per slot
+    # (stats._dsum_sql note on Column-call round trips): ~450 JVM
+    # calls -> ~num_hashes. The optimizer collapses the extra
+    # projection.
+    slot_cols = [
+        F.expr(f"{_slot_hash(hash_fn, seed, '_gh', s)} as _m{i}")
+        for i, s in enumerate(_slots(num_hashes, seed, hash_fn))
+    ]
     if element == "token":
-        # same values as min-merging per-doc minhash_signature arrays
-        # (min over the shard's shingle multiset == min over the union;
-        # duplicate shingles can't move a min) but computed COLUMNAR:
-        # explode the per-doc shingle set once, hash each shingle once,
-        # and let the partial-agg combine take the per-slot minima —
-        # whole-stage codegen over flat columns instead of a 32-wide
-        # array-fold allocation per shingle (measured ~3× on the
-        # sf0.1 documents corpus), and the exploded rows collapse
-        # map-side so the shuffle stays |shards|-bounded.
+        # same values as min-merging per-doc signature arrays (min over
+        # the shard's shingle multiset == min over the union; duplicate
+        # shingles can't move a min) but computed COLUMNAR: explode the
+        # per-doc shingle set once, hash each shingle once, and let the
+        # partial-agg combine take the per-slot minima — whole-stage
+        # codegen over flat columns instead of a 32-wide array-fold
+        # allocation per shingle (measured ~3× on the sf0.1 documents
+        # corpus), and the exploded rows collapse map-side so the
+        # shuffle stays |shards|-bounded.
         grams = df.select(
             F.col(shard_col).alias("_id"),
             F.explode(
                 shingles(F.col(text_col), shingle_mode, shingle_size)
             ).alias("_g"),
         )
-        # hash each shingle ONCE into a named column, then derive the
-        # per-slot re-mixes from it via one parsed expression per slot
-        # (stats._dsum_sql note on Column-call round trips): ~450 JVM
-        # calls -> ~num_hashes. The optimizer collapses the extra
-        # projection; per-slot arithmetic is unchanged.
-        if hash_fn == "rolling":
-            hashed = grams.select(
-                "_id", rolling_hash_raw(F.col("_g")).alias("_gh"))
-            coeffs = _hash_coeffs31(num_hashes, seed)
-            slot_cols = [
-                F.expr(f"pmod({a} * _gh + {b}, {_MERSENNE31}) as _m{i}")
-                for i, (a, b) in enumerate(coeffs)
-            ]
-        else:
-            hashed = grams.select(
-                "_id", F.xxhash64(F.col("_g")).alias("_gh"))
-            slot_cols = [
-                F.expr(f"xxhash64({seed}, {i}, _gh) as _m{i}")
-                for i in range(num_hashes)
-            ]
-        per_doc = hashed.select("_id", *slot_cols)
+        hasher = rolling_hash_raw if hash_fn == "rolling" else F.xxhash64
+        hashed = grams.select("_id", hasher(F.col("_g")).alias("_gh"))
     else:
-        # one element per doc: a content fingerprint re-mixed per slot
-        # fingerprint once into a named column, slots via parsed
-        # expressions — same pattern as the token branch above
+        # one element per doc: a content fingerprint
         if hash_fn == "rolling":
             # md5-prefix fingerprint (< 2^28, so the 16-bit-coefficient
             # universal hash stays far inside int64 — ANSI-safe and
             # SQL-replicable, same discipline as rolling_hash_raw)
             h = F.conv(F.substring(F.md5(F.col(text_col)), 1, 7), 16, 10) \
                 .cast("bigint")
-            coeffs = _hash_coeffs31(num_hashes, seed)
-            slot_cols = [
-                F.expr(f"pmod({a} * _gh + {b}, {_MERSENNE31}) as _m{i}")
-                for i, (a, b) in enumerate(coeffs)
-            ]
         else:
             h = F.xxhash64(F.col(text_col))
-            slot_cols = [
-                F.expr(f"xxhash64({seed}, {i}, _gh) as _m{i}")
-                for i in range(num_hashes)
-            ]
-        per_doc = df.filter(F.col(text_col).isNotNull()).select(
-            F.col(shard_col).alias("_id"), h.alias("_gh")
-        ).select("_id", *slot_cols)
+        hashed = df.filter(F.col(text_col).isNotNull()).select(
+            F.col(shard_col).alias("_id"), h.alias("_gh"))
+    per_doc = hashed.select("_id", *slot_cols)
     sigs = (
         per_doc.groupBy("_id")
         .agg(*[F.expr(f"min(_m{i}) as _m{i}")
@@ -658,52 +596,11 @@ def shard_minhash_dedup(
 
         sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     out = _lsh_band_pairs(
-        sigs, num_hashes, bands, hash_fn, jaccard_threshold, "jaccard_sim"
+        sigs, num_hashes, bands, hash_fn, jaccard_threshold
     ).withColumnsRenamed({"id_a": "shard_a", "id_b": "shard_b"})
     if return_sigs:
         return out, (sigs if persist else None)
     return out
-
-
-def simhash_signature(
-    text: Column, shingle_size: int = 3, shingle_mode: str = "word"
-) -> Column:
-    """64-bit SimHash (bigint) over character shingles.
-
-    Per doc: fold shingle hashes into 64 bit-counters (±1 per bit), then
-    assemble the sign bits. One ``aggregate`` fold over the shingle array —
-    no explode/groupBy, so it composes with any plan shape for free.
-    """
-    hashes = F.transform(
-        shingles(text, shingle_mode, shingle_size), lambda s: F.xxhash64(s)
-    )
-
-    def bit_signs(h: Column) -> Column:
-        # ±1 per bit; bit 63 read via the sign (1<<63 overflows signed 64).
-        signs = [
-            F.when(h.bitwiseAND(F.lit(1 << b)) != 0, F.lit(1)).otherwise(F.lit(-1))
-            for b in range(63)
-        ]
-        signs.append(F.when(h < 0, F.lit(1)).otherwise(F.lit(-1)))
-        return F.array(*signs)
-
-    counts = F.aggregate(
-        hashes,
-        F.array(*[F.lit(0) for _ in range(64)]),
-        lambda acc, h: F.zip_with(acc, bit_signs(h), lambda x, y: x + y),
-    )
-    masks = F.array(
-        *[F.lit(1 << b if b < 63 else -(1 << 63)).cast("bigint") for b in range(64)]
-    )
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            masks,
-            lambda c, m: F.when(c > 0, m).otherwise(F.lit(0).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
 
 
 def simhash_signatures(
@@ -716,13 +613,12 @@ def simhash_signatures(
 ) -> DataFrame:
     """``(id_col, _sh)`` — SimHash per doc, explode + bit-count sums.
 
-    The fold form (:func:`simhash_signature`) builds a 64-CASE expression per
-    shingle which falls out of whole-stage codegen; this DataFrame form
-    explodes shingle hashes and computes per-bit ``sum((h >> b) & 1)``
-    aggregates. Partial (map-side) aggregation means the shuffle carries one
-    row per doc — scale-safe, and every operator stays in codegen. Bit ``b``
-    of the signature is set iff more than half the shingle hashes set it —
-    identical output to the fold form.
+    Explodes shingle hashes and computes per-bit ``sum((h >> b) & 1)``
+    aggregates (a per-doc array fold would build a 64-CASE expression per
+    shingle, which falls out of whole-stage codegen). Partial (map-side)
+    aggregation means the shuffle carries one row per doc — scale-safe,
+    and every operator stays in codegen. Bit ``b`` of the signature is
+    set iff more than half the shingle hashes set it.
 
     ``hash_fn='xxhash'`` (production): 64-bit signature. ``'rolling'``:
     31-bit polynomial shingle hashes → 31-bit signature, every operation

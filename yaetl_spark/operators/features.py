@@ -46,6 +46,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .stats import _dsum
+
 __all__ = [
     "apply_category_index",
     "apply_scaler",
@@ -61,13 +63,7 @@ __all__ = [
     "scale_features",
 ]
 
-_DEC = "decimal(38,9)"
 _METHODS = ("zscore", "minmax", "robust")
-
-
-def _dsum(c: Column) -> Column:
-    """Order-independent sum (see module docstring)."""
-    return F.sum(F.round(c, 9).cast(_DEC)).cast("double")
 
 
 def _pct(col: str, p: float, exact: bool, accuracy: int) -> Column:

@@ -44,6 +44,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .stats import _DEC, _dsum
+
 __all__ = [
     "Check",
     "between",
@@ -59,13 +61,6 @@ __all__ = [
     "uniqueness",
     "validate",
 ]
-
-_DEC = "decimal(38,9)"
-
-
-def _dsum(c: Column) -> Column:
-    """Order-independent sum (see operators/stats.py:_dsum)."""
-    return F.sum(F.round(c, 9).cast(_DEC)).cast("double")
 
 
 @dataclass(frozen=True)

@@ -25,6 +25,11 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
+# The token split of :func:`tokenize` (and so of the BPE and MinHash
+# word shingles): runs of anything but lowercase ASCII letters/digits.
+TOKEN_SPLIT = r"[^a-z0-9]+"
+
+
 def let_once(bound: Column, body) -> Column:
     """Let-binding for Column expressions: evaluate ``bound`` ONCE per
     row and reference it many times inside ``body`` (a callable taking
@@ -96,7 +101,7 @@ def token_count(text: Column) -> Column:
     ``n_spaces(trim(text)) + 1`` on single-space-normalized text — identical
     in any SQL engine, unlike regex-split edge cases.
     """
-    norm = F.trim(F.regexp_replace(text, r"\s+", " "))
+    norm = normalize_ws(text)
     return F.when(F.length(norm) == 0, F.lit(0)).otherwise(
         F.length(norm) - F.length(F.replace(norm, F.lit(" "), F.lit(""))) + 1
     )
@@ -227,13 +232,20 @@ def lang_id(text: Column, markers: dict[str, list[str]] | None = None) -> Column
     return best_lang
 
 
+def normalize_ws(text: Column) -> Column:
+    """Whitespace runs collapsed to one space, ends trimmed — the one
+    whitespace normalizer behind :func:`token_count`,
+    :func:`normalize_ws_case` and the curation word-length rule."""
+    return F.trim(F.regexp_replace(text, r"\s+", " "))
+
+
 def normalize_ws_case(text: Column) -> Column:
     """Whitespace/case normalization shared by the output-visible
     :func:`fingerprint` and the internal dedup keys (``exact_dedup``):
-    lowercase, whitespace runs collapsed to one space, ends trimmed.
-    ONE definition so the internal equality key can never drift from
-    the fingerprint the outputs document."""
-    return F.lower(F.trim(F.regexp_replace(text, r"\s+", " ")))
+    lowercase :func:`normalize_ws`. ONE definition so the internal
+    equality key can never drift from the fingerprint the outputs
+    document."""
+    return F.lower(normalize_ws(text))
 
 
 def fingerprint(text: Column) -> Column:
@@ -272,13 +284,13 @@ def rolling_fingerprint(
     return let_once(normalize_ws_case(text), fold)
 
 
-def bpe_token_count(text: Column, pattern: str = r"[^a-z0-9]+") -> Column:
+def bpe_token_count(text: Column, pattern: str = TOKEN_SPLIT) -> Column:
     """Token count under the BPE-ish regex tokenizer (:func:`tokenize`) —
     the subword-friendly companion to whitespace :func:`token_count`."""
     return F.size(tokenize(text, pattern))
 
 
-def tokenize(text: Column, pattern: str = r"[^a-z0-9]+") -> Column:
+def tokenize(text: Column, pattern: str = TOKEN_SPLIT) -> Column:
     """Lowercase + split on non-alphanumeric runs → array<string> (empty
     tokens removed). The BPE-ish regex tokenizer for shingling."""
     cleaned = F.lower(text)
@@ -420,7 +432,7 @@ def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     num_merges: int = 64,
-    pattern: str = r"[^a-z0-9]+",
+    pattern: str = TOKEN_SPLIT,
     min_count: int = 1,
     end_of_word: str = "</w>",
     return_vocab: bool = False,
@@ -587,7 +599,7 @@ def bpe_apply(
     merges,
     id_col: str = "doc_id",
     text_col: str = "text",
-    pattern: str = r"[^a-z0-9]+",
+    pattern: str = TOKEN_SPLIT,
     end_of_word: str = "</w>",
     broadcast_vocab: bool = True,
     max_merges: int = 65536,

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .stats import _dsum_sql
+
 __all__ = [
     "autocorrelation", "changepoints", "cohort_retention",
     "date_spine", "ewma", "gap_fill", "rolling_quantile",
@@ -511,9 +513,6 @@ def autocorrelation(
     # SQL produces the IDENTICAL expressions (same round/cast/decimal
     # semantics) — pinned by the bit-exact oracle test.
 
-    def dsum(c_sql: str) -> str:
-        return f"cast(sum(cast(round({c_sql}, 9) as decimal(38,9))) as double)"
-
     by_q = ", ".join(f"`{c}`" for c in by)
     val = F.col(value_col).cast("double")
     clean = df.dropna(subset=[value_col, index_col]).select(
@@ -527,17 +526,17 @@ def autocorrelation(
     staged = clean.select(*by, "_x", *lag_cols)
     aggs = [
         F.expr("count(1) as _n"),
-        F.expr(f"{dsum('_x')} as _sx"),
-        F.expr(f"{dsum('_x * _x')} as _sxx"),
+        F.expr(f"{_dsum_sql('_x')} as _sx"),
+        F.expr(f"{_dsum_sql('_x * _x')} as _sxx"),
     ]
     for k in range(1, max_lag + 1):
         aggs.extend([
             F.expr(f"count(_l{k}) as _n{k}"),
-            F.expr(f"{dsum(f'_x * _l{k}')} as _sxy{k}"),
+            F.expr(f"{_dsum_sql(f'_x * _l{k}')} as _sxy{k}"),
             F.expr(
-                f"{dsum(f'case when _l{k} is not null then _x end')}"
+                f"{_dsum_sql(f'case when _l{k} is not null then _x end')}"
                 f" as _sxt{k}"),
-            F.expr(f"{dsum(f'_l{k}')} as _sxl{k}"),
+            F.expr(f"{_dsum_sql(f'_l{k}')} as _sxl{k}"),
         ])
     g = staged.groupBy(*by).agg(*aggs)
     mean = "(_sx / cast(_n as double))"

@@ -348,7 +348,7 @@ class MergeParquetSink(Sink):
             for row in touched:
                 clause = None
                 for c in self.partition_by:
-                    eq = F.col(c) == F.lit(row[c])
+                    eq = F.col(c).eqNullSafe(F.lit(row[c]))
                     clause = eq if clause is None else (clause & eq)
                 pred = clause if pred is None else (pred | clause)
         existing = spark.read.parquet(self.path)

@@ -323,54 +323,18 @@ def stream_minhash_probe(
     parameters MUST match the ones the index was built with (they are
     pure arithmetic — a mismatch is garbage, not an error).
     """
-    from ..operators.dedup import _banded_signatures, minhash_signature
+    from ..operators.dedup import _probe_candidates, _verified
 
     df = _watermarkable(stream, time_col)
     if df.isStreaming:
         df = df.withWatermark(time_col, watermark)
-    sigs = df.select(
-        F.col(time_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
-        minhash_signature(
-            F.col(text_col), num_hashes, shingle_size, seed,
-            shingle_mode, hash_fn,
-        ).alias("_sig"),
-    ).filter(F.size("_sig") > 0)
-    banded = _banded_signatures(
-        sigs, num_hashes, bands, hash_fn, carry=("_ts",))
-    probe_side = banded.select(
-        F.col("_ts"),
-        F.col("_id").alias("_p_id"),
-        F.col("_sig").alias("_p_sig"),
-        F.col("band").alias("_p_band"),
-        F.col("bhash").alias("_p_bhash"),
+    candidates = _probe_candidates(
+        index, df, text_col, id_col, num_hashes, bands, shingle_size, seed,
+        shingle_mode, hash_fn, index_id_col, exclude_same_id,
+        carry=(time_col,),
     )
-    cond = (F.col("_p_band") == F.col("band")) & (
-        F.col("_p_bhash") == F.col("bhash")
-    )
-    if exclude_same_id:
-        cond = cond & (F.col("_p_id") != F.col(index_id_col))
-    sim = (
-        F.size(
-            F.filter(
-                F.zip_with("_p_sig", "sig", lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    )
-    matches = (
-        probe_side.join(index, cond)
-        .select(
-            F.col("_ts"),
-            F.col("_p_id").alias("probe_id"),
-            F.col(index_id_col).alias("index_id"),
-            F.round(sim, 6).alias("jaccard_sim"),
-        )
-    )
-    if jaccard_threshold is not None:
-        matches = matches.filter(
-            F.col("jaccard_sim") >= jaccard_threshold)
+    matches = _verified(candidates, [time_col, "probe_id", "index_id"],
+                        "sig_p", "sig_i", num_hashes, jaccard_threshold)
     if matches.isStreaming:
         deduped = matches.dropDuplicatesWithinWatermark(
             ["probe_id", "index_id"])
