@@ -233,6 +233,94 @@ def test_fit_init_rows_follow_order_by_cid(spark, fit, id_type):
     assert [v for _, v in got] == expected
 
 
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_fit"])
+def test_fit_null_init_vectors(spark, fit):
+    """A listed init id whose vector is NULL raises a ValueError naming
+    the id; the sampled init skips NULL vectors, so the fit equals the
+    fit of the frame without them (both used to fail with a TypeError
+    deep in the driver-side centroid code)."""
+    import yaetl_spark.operators as ops
+
+    rows = [(i, [float(i), float(i % 3)]) for i in range(1, 7)]
+    df = spark.createDataFrame(
+        rows + [(0, None), (7, None)], "vec_id bigint, embedding array<double>")
+    run = getattr(ops, fit)
+    kw = {"m": 1} if fit == "pq_fit" else {}
+    with pytest.raises(ValueError, match=f"{fit}: init_ids entry 0 has a NULL vector"):
+        run(df, k=2, iters=1, init_ids=[1, 0], **kw)
+    clean = df.filter(F.col("embedding").isNotNull())
+    assert run(df, k=6, iters=1, **kw) == run(clean, k=6, iters=1, **kw)
+
+
+@pytest.fixture(scope="module")
+def with_twins(spark):
+    """30 seeded 3-d vectors and an exact copy of each (id 30 + i copies
+    id i): an init holding a vector and its copy leaves the copy's cell
+    empty in the first assignment (ties go to the lowest cell)."""
+    import numpy as np
+
+    base = np.random.RandomState(5).standard_normal((30, 3)).tolist()
+    rows = list(enumerate(base)) + [(30 + i, v) for i, v in enumerate(base)]
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+
+
+@pytest.mark.parametrize("iters", [0, 1, 3])
+@pytest.mark.parametrize("init", ["sampled", "explicit"])
+def test_kmeans_fit_is_one_subspace_pq_fit(with_twins, init, iters):
+    """kmeans_fit equals pq_fit(m=1)[0] exactly, including the
+    empty-cell rule (the cell keeps its centroid)."""
+    import yaetl_spark.operators as ops
+
+    # seed 47 samples a twin pair first
+    kw = {"k": 6, "seed": 47,
+          "init_ids": [0, 30, 5, 12, 20, 25] if init == "explicit" else None}
+    got = ops.kmeans_fit(with_twins, iters=iters, **kw)
+    [want] = ops.pq_fit(with_twins, m=1, iters=iters, **kw)
+    assert got == want
+    start = ops.kmeans_fit(with_twins, iters=0, **kw)
+    assigned, _ = ops.build_ivf_index(with_twins, centroids=start)
+    assert assigned.select("_cell").distinct().count() < 6
+
+
+def test_kmeans_inertia_is_distance_to_assigned_centroid(clustered):
+    """kmeans_inertia equals the per-row squared distance to the
+    centroid of the row's assigned cell, summed (one partition, so the
+    sum order is fixed)."""
+    from yaetl_spark.operators import build_ivf_index
+
+    df = clustered.coalesce(1)
+    cents = kmeans_fit(df, k=3, iters=2, init_ids=[0, 1, 2])
+    assigned, _ = build_ivf_index(df, centroids=cents)
+    cvec = F.create_map(*[
+        x for cell, vec in cents
+        for x in (F.lit(cell), F.array(*[F.lit(float(v)) for v in vec]))
+    ])[F.col("_cell")]
+    d2 = F.aggregate(
+        F.zip_with(F.col("embedding"), cvec,
+                   lambda x, y: (x.cast("double") - y)
+                   * (x.cast("double") - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    assert kmeans_inertia(df, cents) == assigned.agg(F.sum(d2)).first()[0]
+
+
+def test_empty_centroid_set_raises(spark):
+    """An empty centroid set (an empty frame samples none, or an explicit
+    ``centroids=[]``) raises ValueError before any plan is built."""
+    from yaetl_spark.operators import build_ivf_index
+
+    schema = "vec_id bigint, embedding array<double>"
+    empty = spark.createDataFrame([], schema)
+    one = spark.createDataFrame([(1, [1.0, 0.0])], schema)
+    with pytest.raises(ValueError, match="no centroids"):
+        build_ivf_index(empty, num_cells=4)
+    with pytest.raises(ValueError, match="no centroids"):
+        build_ivf_index(one, centroids=[])
+    with pytest.raises(ValueError, match="no centroids"):
+        kmeans_inertia(one, [])
+
+
 def test_kmeans_high_dim_update_is_dim_independent(spark):
     """dim=256: the posexplode update keeps the plan at two aggregate
     expressions total (count + sum over the exploded value) instead of

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import TOKEN_SPLIT, char_ngrams
+from .text import _MERSENNE31, TOKEN_SPLIT, char_ngrams, rolling_hash_raw
 
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -57,13 +57,10 @@ def exact_dedup(
     )
 
 
-# 31-bit family for the oracle-checkable hash_fn='rolling' mode: a < 2^16
-# keeps a*h + b under 2^47 — exact in int64 in ANY engine (DuckDB BIGINT
-# errors on overflow rather than wrapping, so the 61-bit family can't be
-# replicated there).
-_MERSENNE31 = (1 << 31) - 1
-
-
+# 31-bit family for the oracle-checkable hash_fn='rolling' mode (modulus
+# text._MERSENNE31): a < 2^16 keeps a*h + b under 2^47 — exact in int64
+# in ANY engine (DuckDB BIGINT errors on overflow rather than wrapping,
+# so the 61-bit family can't be replicated there).
 def _hash_coeffs31(k: int, seed: int = 42) -> list[tuple[int, int]]:
     coeffs = []
     state = seed
@@ -74,22 +71,6 @@ def _hash_coeffs31(k: int, seed: int = 42) -> list[tuple[int, int]]:
         b = state % _MERSENNE31
         coeffs.append((a, b))
     return coeffs
-
-
-def rolling_hash_raw(s: Column, base: int = 31, mod: int = _MERSENNE31) -> Column:
-    """Polynomial hash of a string column, NO normalization (for already-
-    normalized shingles). Exactly replicable in SQL via list_reduce."""
-    codes = F.transform(
-        F.sequence(F.lit(1), F.length(s)),
-        lambda i: F.ascii(s.substr(i, F.lit(1))).cast("bigint"),
-    )
-    return F.when(F.length(s) == 0, F.lit(0).cast("bigint")).otherwise(
-        F.aggregate(
-            codes,
-            F.lit(0).cast("bigint"),
-            lambda h, c: F.pmod(h * F.lit(base) + c, F.lit(mod)),
-        )
-    )
 
 
 def shingles(
@@ -166,10 +147,11 @@ def _signature_fold_sql(
 ) -> str:
     """The MinHash signature (array<bigint>, length ``num_hashes``) of
     the shingle array ``sh``, as SQL text: hash each shingle once
-    (``xxhash64``, or :func:`rolling_hash_raw`'s 31-bit polynomial),
-    then ONE fold with an array-of-minima accumulator taking every
-    slot's :func:`_slot_hash`, so the shingle construction runs once
-    per row regardless of ``num_hashes``. The slot parameters are one
+    (``xxhash64``, or :func:`~.text.rolling_hash_raw` written as SQL
+    text — keep the two in step), then ONE fold with an
+    array-of-minima accumulator taking every slot's
+    :func:`_slot_hash`, so the shingle construction runs once per row
+    regardless of ``num_hashes``. The slot parameters are one
     literal array — a single parse instead of ~400 Column calls (a
     Python→JVM round trip each; see stats._dsum_sql)."""
     if hash_fn == "rolling":
@@ -804,7 +786,7 @@ def embedding_dedup_pairs(
     ``brute_force=True`` switches to the exact quadratic join (for tests /
     small dims).
     """
-    from .similarity import dot_product, norm
+    from .similarity import _cosine, norm
 
     # norm projected per ROW: an inline cosine_similarity() in the pair
     # select would re-fold each side's norm once per PAIR
@@ -872,10 +854,7 @@ def embedding_dedup_pairs(
             b,
             (F.col("a._bkt") == F.col("b._bkt")) & (F.col("a._id") < F.col("b._id")),
         )
-    denom = F.col("a._n") * F.col("b._n")
-    sim = F.when(denom == 0, F.lit(0.0)).otherwise(
-        dot_product(F.col("a._v"), F.col("b._v")) / denom
-    )
+    sim = _cosine(F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n"))
     return pairs.select(
         F.col("a._id").alias("id_a"),
         F.col("b._id").alias("id_b"),

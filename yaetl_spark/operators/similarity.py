@@ -1,15 +1,32 @@
 """Similarity search over embedding columns (beyond-reference).
 
-- :func:`cosine_similarity` / :func:`dot_product` — pure expression folds
+Every operator here is built on one vector core, each rule written
+once, so a change to a rule moves every operator (and its DuckDB
+oracle) together:
+
+- :func:`dot_product` / :func:`norm`: pure expression folds
   (``zip_with`` + ``aggregate``), JVM-side, sequential left-to-right
-  summation (bit-compatible with DuckDB's list functions — oracle-safe).
-- :func:`brute_force_topk` — exact top-k vs a query vector: one narrow
-  map + ``orderBy().limit(k)``; Spark executes it as per-partition top-k
-  + driver merge (TakeOrderedAndProject), no full sort, no full shuffle.
-- :func:`ivf_topk` — the scale path: k-means-lite inverted-file index.
-  Centroids are sampled deterministically; vectors are assigned to the
-  nearest centroid (one narrow pass); queries probe only ``nprobe``
-  nearest cells. At 100 TB, turns a full scan into a cells-fraction scan.
+  summation (bit-compatible with DuckDB's list functions, oracle-safe).
+  ``_cosine`` is the one zero-guarded cosine over precomputed norms.
+- ``_sqdist`` / ``_py_sqdist``: the squared-L2 fold as a Column and as
+  the bit-identical driver-side IEEE loop. ``_nearest``: the
+  ``(d, cell)`` struct-min argmin over a centroid literal.
+- ``_seed_rows``: init vectors, the listed ids in id order or the
+  ``xxhash64(id + seed)`` sample. ``_lloyd``: the one Lloyd's loop
+  (``m`` fused subspaces, grid-snapped means). ``_probe_cells``: the
+  ``nprobe`` cells nearest a query. ``_cell_pairs``: fit or reuse
+  centroids, assign, guard the cell population, and self-join within
+  each cell on per-row norms.
+
+Operators: exact search (:func:`cosine_similarity`,
+:func:`brute_force_topk`); IVF (:func:`build_ivf_index`,
+:func:`ivf_topk`, :func:`kmeans_fit`, :func:`kmeans_inertia`); product
+quantization (:func:`pq_fit`, :func:`pq_encode`, :func:`pq_adc_topk`,
+:func:`ivf_pq_topk`); within-cell pair mining (:func:`semantic_dedup`,
+:func:`hard_negative_mining`); broadcast-side scoring
+(:func:`semantic_decontaminate`, :func:`retrieval_metrics`); audits and
+fusion (:func:`topk_recall`, :func:`reciprocal_rank_fusion`); and
+:func:`random_projection`.
 """
 
 from __future__ import annotations
@@ -17,6 +34,7 @@ from __future__ import annotations
 import decimal
 import math
 import numbers
+import operator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,9 +58,19 @@ def norm(a: Column) -> Column:
     )
 
 
+def _cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their norms ``na``/``nb``; 0.0
+    when either norm is 0. Callers hoist the norms per row (an inline
+    :func:`norm` in a pair select re-folds each side once per PAIR);
+    the float ops, and so the rounded scores, stay those of the inline
+    form."""
+    return F.when(na * nb == 0, F.lit(0.0)).otherwise(
+        dot_product(a, b) / (na * nb)
+    )
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
-    denom = norm(a) * norm(b)
-    return F.when(denom == 0, F.lit(0.0)).otherwise(dot_product(a, b) / denom)
+    return _cosine(a, b, norm(a), norm(b))
 
 
 def brute_force_topk(
@@ -53,24 +81,20 @@ def brute_force_topk(
     id_col: str = "vec_id",
     metric: str = "cosine",
 ) -> DataFrame:
-    """Exact top-k nearest rows to ``query_vec``.
+    """Exact top-k nearest rows to ``query_vec``: one narrow map +
+    ``orderBy().limit(k)``, which Spark runs as per-partition top-k +
+    driver merge (TakeOrderedAndProject): no full sort, no shuffle.
 
     Returns ``(id, score)`` ordered by (score desc, id) — the id tiebreak
     makes results deterministic across engines and partitionings.
     """
     q = _vec_lit(query_vec)
     if metric == "cosine":
-        # query norm computed ONCE driver-side — the same left fold +
-        # IEEE sqrt as norm(), bit-identical; an inline
-        # cosine_similarity() would re-fold this constant per row
-        acc = 0.0
-        for x in query_vec:
-            acc += float(x) * float(x)
-        qn = math.sqrt(acc)
-        denom = norm(F.col(vec_col)) * F.lit(qn)
-        score = F.when(denom == 0, F.lit(0.0)).otherwise(
-            dot_product(F.col(vec_col), q) / denom
-        )
+        # query norm computed ONCE driver-side (squared distance to the
+        # origin: the same left fold + IEEE sqrt as norm(), bit-identical)
+        qn = math.sqrt(_py_sqdist(query_vec, [0.0] * len(query_vec)))
+        col = F.col(vec_col)
+        score = _cosine(col, q, norm(col), F.lit(qn))
     elif metric == "dot":
         score = dot_product(F.col(vec_col), q)
     else:
@@ -105,6 +129,97 @@ def _mat_lit(rows: list[list[float]]) -> Column:
     )
 
 
+def _sqdist(v: Column, c: Column) -> Column:
+    """Squared L2 distance of ``v`` (cast to double per element) to the
+    double vector ``c``: a sequential left fold, the oracle's order."""
+    return F.aggregate(
+        F.zip_with(
+            v, c,
+            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _py_sqdist(q, c) -> float:
+    """:func:`_sqdist` on the driver: the same sequential IEEE-double
+    sum, bit-identical to the engines' fold (oracle determinism)."""
+    d = 0.0
+    for a, b in zip(q, c):
+        d += (float(a) - float(b)) * (float(a) - float(b))
+    return d
+
+
+def _nearest(v: Column, book: list[tuple[int, list[float]]]) -> Column:
+    """The ``(d, cell)`` struct of the centroid in ``book`` nearest
+    ``v``. ``array_min`` orders structs by (d asc, cell asc), so ties
+    break to the lowest cell. One linear-size expression; a chained
+    when(d < best_d) argmin would embed the running best twice per step
+    (exponential tree). The centroids ride in as ONE nested-array
+    literal (a single Catalyst constant + one py4j call) instead of
+    cells × dim scalar literals — for 16×64 that cuts ~2 s of
+    driver-side analysis."""
+    if not book:
+        raise ValueError(
+            "no centroids to assign to (an empty input sampled none, "
+            "or an empty centroid list was passed)")
+    ids = F.expr("array(" + ",".join(str(int(c)) for c, _ in book) + ")")
+    return F.array_min(F.transform(
+        _mat_lit([[float(x) for x in cv] for _, cv in book]),
+        lambda cv, i: F.struct(
+            _sqdist(v, cv).alias("d"), F.get(ids, i).alias("cell")
+        ),
+    ))
+
+
+def _seed_rows(
+    df: DataFrame, vec_col: str, id_col: str, n: int, ids, seed: int,
+    what: str,
+) -> list[list[float]]:
+    """Init vectors: those of the listed ``ids`` in id order (the order
+    ``.orderBy(id)`` gives), else the first ``n`` non-NULL vectors in
+    ``xxhash64(id + seed)`` order (one pass, reproducible, no RNG).
+
+    Listed rows are collected unordered and sorted on the driver:
+    ``.orderBy().collect()`` pays a range-partitioning SAMPLING job
+    before the sort job — two sequential driver round trips to order a
+    handful of rows (guide §5). That sort needs ids of one comparable
+    type and no NaN (NaN has no order; an int next to a str raises
+    mid-fit), so both are checked first; a listed id whose vector is
+    NULL raises a ValueError naming it. ``what`` names the caller and
+    its id parameter in these errors."""
+    base = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+    if ids is None:
+        rows = (
+            base.filter(F.col("cvec").isNotNull())
+            .orderBy(F.xxhash64(F.col("cid") + F.lit(seed)))
+            .limit(n)
+            .collect()
+        )
+    else:
+        ids = list(ids)
+        kinds = {
+            "str" if isinstance(i, str)
+            else "number" if isinstance(i, (numbers.Real, decimal.Decimal))
+            and not isinstance(i, bool)
+            else type(i).__name__
+            for i in ids
+        }
+        if len(kinds) > 1:
+            raise ValueError(
+                f"{what} mix id types ({', '.join(sorted(kinds))}); "
+                "they must be all numbers or all strings")
+        if any(i != i for i in ids):
+            raise ValueError(f"{what} contain NaN, which has no order")
+        rows = sorted(base.filter(F.col("cid").isin(ids)).collect(),
+                      key=lambda r: r.cid)
+        null = [r.cid for r in rows if r.cvec is None]
+        if null:
+            raise ValueError(f"{what} entry {null[0]!r} has a NULL vector")
+    return [[float(x) for x in r.cvec] for r in rows]
+
+
 def build_ivf_index(
     df: DataFrame,
     num_cells: int = 64,
@@ -115,67 +230,37 @@ def build_ivf_index(
     centroid_source: DataFrame | None = None,
     centroids: list[tuple[int, list[float]]] | None = None,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """Assign every vector to its nearest sampled centroid.
+    """Assign every vector to its nearest centroid: the k-means-lite
+    inverted-file index. At 100 TB it turns a full scan into a
+    cells-fraction scan (:func:`ivf_topk`).
 
-    Centroids: a deterministic sample of ``num_cells`` vectors (one pass,
-    ``xxhash64(id)`` order — reproducible, no RNG), or the explicitly
-    listed ``centroid_ids`` (id order) — the latter gives a rule plain SQL
-    can replicate, which the oracle-checked ``ann_ivf`` query uses.
-    Assignment: broadcast the centroid array and argmin over it per row
-    (narrow map — the index build never shuffles the big table; write it
-    partitioned by cell for pruned probes).
+    Centroids: ``centroids`` as given, or the ``num_cells`` vectors
+    :func:`_seed_rows` draws from ``centroid_source`` (default ``df``):
+    the xxhash64 sample, or the explicitly listed ``centroid_ids`` in id
+    order — the latter gives a rule plain SQL can replicate, which the
+    oracle-checked ``ann_ivf`` query uses. Assignment: the centroid
+    array rides in as a literal and :func:`_nearest` argmins over it per
+    row (narrow map — the index build never shuffles the big table;
+    write it partitioned by cell for pruned probes). An empty centroid
+    set raises ``ValueError``.
     Returns (assigned_df with ``_cell`` column, centroids list).
     """
     if centroids is None:
         src = centroid_source if centroid_source is not None else df
-        base = src.select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-        )
-        if centroid_ids is not None:
-            cents = (
-                base.filter(F.col("cid").isin(list(centroid_ids)))
-                .orderBy("cid")
-                .collect()
-            )
-        else:
-            cents = (
-                base.orderBy(F.xxhash64(F.col("cid") + F.lit(seed)))
-                .limit(num_cells)
-                .collect()
-            )
-        centroids = [(i, list(r.cvec)) for i, r in enumerate(cents)]
-
-    # argmin over centroids via array_min on (distance, cell) structs —
-    # struct ordering is (d asc, cell asc), so ties break to the lowest
-    # cell. One linear-size expression; a chained when(d < best_d) argmin
-    # would embed the running best twice per step (exponential tree).
-    # The whole centroid set rides in as ONE nested-array literal (a single
-    # Catalyst constant + one py4j call) instead of num_cells × dim scalar
-    # literals — for 16×64 that cuts ~2 s of driver-side analysis.
-    v = F.col(vec_col)
-    cell_ids = [int(i) for i, _ in centroids]
-    cvecs = [[float(x) for x in cvec] for _, cvec in centroids]
-
-    def sqdist(cv: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                v, cv,
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    ids_lit = F.expr(
-        "array(" + ",".join(str(i) for i in cell_ids) + ")")
-    dist_structs = F.transform(
-        _mat_lit(cvecs),
-        lambda cv, i: F.struct(
-            sqdist(cv).alias("d"), F.get(ids_lit, i).alias("cell")
-        ),
-    )
-    best = F.array_min(dist_structs)
+        centroids = list(enumerate(_seed_rows(
+            src, vec_col, id_col, num_cells, centroid_ids, seed,
+            "build_ivf_index: centroid_ids")))
+    best = _nearest(F.col(vec_col), centroids)
     return df.withColumn("_cell", best.getField("cell")), centroids
+
+
+def _probe_cells(
+    centroids: list[tuple[int, list[float]]], q: list[float], nprobe: int
+) -> list[int]:
+    """Ids of the ``nprobe`` centroids nearest ``q`` (driver-side
+    :func:`_py_sqdist`; the stable sort keeps list order on ties)."""
+    probe = sorted(centroids, key=lambda ic: _py_sqdist(q, ic[1]))
+    return [i for i, _ in probe[:nprobe]]
 
 
 def ivf_topk(
@@ -192,16 +277,7 @@ def ivf_topk(
     With the index table written ``partitionBy('_cell')``, the cell filter
     is partition pruning — the 100 TB scan becomes nprobe/num_cells of it.
     """
-    def dist(c: list[float]) -> float:
-        # sequential left-to-right IEEE-double sum — bit-identical to the
-        # engines' fold-based distance (oracle determinism)
-        d = 0.0
-        for a, b in zip(c, query_vec):
-            d += (a - b) * (a - b)
-        return d
-
-    probe = sorted(centroids, key=lambda ic: dist(ic[1]))[:nprobe]
-    cells = [i for i, _ in probe]
+    cells = _probe_cells(centroids, query_vec, nprobe)
     return brute_force_topk(
         assigned.filter(F.col("_cell").isin(cells)),
         query_vec,
@@ -211,225 +287,42 @@ def ivf_topk(
     )
 
 
-def _init_rows(base: DataFrame, init_ids, fn: str) -> list:
-    """The ``(cid, cvec)`` rows of ``init_ids`` in id order, the order
-    ``.orderBy("cid")`` gives. The ≤ k rows are collected unordered and
-    sorted on the driver: ``.orderBy().collect()`` pays a
-    range-partitioning SAMPLING job before the sort job — two sequential
-    driver round trips to order a handful of rows (guide §5). That sort
-    needs ids of one comparable type and no NaN (NaN has no order; an
-    int next to a str raises mid-fit), so both are checked first."""
-    ids = list(init_ids)
-    kinds = {
-        "str" if isinstance(i, str)
-        else "number" if isinstance(i, (numbers.Real, decimal.Decimal))
-        and not isinstance(i, bool)
-        else type(i).__name__
-        for i in ids
-    }
-    if len(kinds) > 1:
-        raise ValueError(
-            f"{fn}: init_ids mix id types ({', '.join(sorted(kinds))}); "
-            "they must be all numbers or all strings")
-    if any(i != i for i in ids):
-        raise ValueError(f"{fn}: init_ids contain NaN, which has no order")
-    return sorted(base.filter(F.col("cid").isin(ids)).collect(),
-                  key=lambda r: r.cid)
-
-
-def kmeans_fit(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 16,
-    iters: int = 5,
-    init_ids: list[int] | None = None,
-    seed: int = 42,
-    cache: bool = False,
-) -> list[tuple[int, list[float]]]:
-    """Lloyd's k-means over an embedding column, DataFrame-native.
-
-    The centroid trainer for :func:`build_ivf_index` (IVF quality depends
-    on centroids matching the data distribution, not a random sample).
-
-    Scale shape per iteration: assignment is the same broadcast-argmin
-    narrow map the IVF index uses (no shuffle of vectors); the update
-    ``posexplode``s each assigned vector and aggregates one ``sum`` per
-    ``(_cell, dimension)`` key — map-side combine reduces the shuffle to
-    k × dim doubles per input partition (raw vectors never shuffle), and
-    because the dimension is a grouping VALUE rather than a generated
-    column, the plan holds two aggregate expressions total regardless of
-    dim — dim=1024 costs no more codegen than dim=4. k centroids come
-    back to the driver between iterations (k × dim floats, a few KB);
-    ``iters`` bounded jobs total. Deterministic: init from ``init_ids``
-    (id order) or the xxhash64 sample used by the index builder — no RNG
-    state.
-
-    Returns ``[(cell_id, centroid_vector), ...]`` ready to pass as
-    ``build_ivf_index(..., centroids=...)``.
-    """
-    base = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-    if init_ids is not None:
-        rows = _init_rows(base, init_ids, "kmeans_fit")
-    else:
-        rows = (
-            base.orderBy(F.xxhash64(F.col("cid") + F.lit(seed)))
-            .limit(k)
-            .collect()
-        )
-    if not rows:
-        raise ValueError("kmeans_fit: empty input")
-    # vector width from the init rows themselves — the separate
-    # .first() dim probe was one more sequential driver job per fit
-    # (guide §5: the driver should do almost no data work; each
-    # round-trip job is pure latency at any scale)
-    dim = len(rows[0].cvec)
-    centroids = [(i, [float(x) for x in r.cvec]) for i, r in enumerate(rows)]
-    if len(centroids) < k:
-        raise ValueError(f"kmeans_fit: only {len(centroids)} init vectors for k={k}")
-
-    # prune to the two needed columns; with cache=True (standard Lloyd's
-    # practice for a curated feature table) the pruned frame persists
-    # across iterations instead of re-scanning the source each round
-    work = df.select(id_col, vec_col)
-    if cache:
-        work = work.persist()
-    try:
-        for _ in range(iters):
-            assigned, _ = build_ivf_index(
-                work, vec_col=vec_col, id_col=id_col, centroids=centroids
-            )
-            sums = (
-                assigned.select(
-                    "_cell",
-                    F.posexplode(F.col(vec_col)).alias("_i", "_x"),
-                )
-                .groupBy("_cell", "_i")
-                .agg(
-                    F.count(F.lit(1)).alias("_n"),
-                    F.sum(F.col("_x").cast("double")).alias("_s"),
-                )
-                .collect()
-            )
-            # snap to a 1e-9 grid with floor(x*1e9 + 0.5)/1e9 — the SAME
-            # float ops the oracle's SQL runs, so both engines land on
-            # the identical double even AT grid boundaries (library
-            # round() implementations differ there). Summation order
-            # (partition layout, core count) perturbs the mean only in
-            # the last ulps (~1e-13), far inside the grid step, and the
-            # grid is far finer than any real assignment gap.
-            acc: dict[int, dict[int, float]] = {}
-            for r in sums:
-                acc.setdefault(r._cell, {})[r._i] = (
-                    math.floor(r._s / r._n * 1e9 + 0.5) / 1e9
-                )
-            updated = {
-                cell: [dims[i] for i in range(dim)]
-                for cell, dims in acc.items()
-            }
-            # empty cells keep their previous centroid (standard Lloyd's)
-            centroids = [
-                (cell, updated.get(cell, vec)) for cell, vec in centroids
-            ]
-    finally:
-        if cache:
-            work.unpersist()
-    return centroids
-
-
-def kmeans_inertia(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> float:
-    """Sum of squared distances to the nearest centroid (fit quality)."""
-    assigned, _ = build_ivf_index(
-        df, vec_col=vec_col, id_col=id_col, centroids=centroids
-    )
-    cvec = F.create_map(
-        *[x for cell, vec in centroids for x in (F.lit(cell), _vec_lit(vec))]
-    )[F.col("_cell")]
-    v = F.col(vec_col)
-    d2 = F.aggregate(
-        F.zip_with(v, cvec, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    row = assigned.agg(F.sum(d2)).first()
-    return float(row[0]) if row and row[0] is not None else 0.0
-
-
-def pq_fit(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 4,
-    k: int = 16,
-    iters: int = 5,
-    init_ids: list[int] | None = None,
-    seed: int = 42,
-    cache: bool = False,
+def _lloyd(
+    df: DataFrame, vec_col: str, id_col: str, m: int, k: int, iters: int,
+    init_ids, seed: int, cache: bool, fn: str,
 ) -> list[list[tuple[int, list[float]]]]:
-    """Product-quantization codebooks (Jégou, Douze & Schmid 2011,
-    "Product Quantization for Nearest Neighbor Search"): split the
-    vector into ``m`` contiguous subspaces and run :func:`kmeans_fit`
-    independently in each — ``m`` codebooks of ``k`` centroids whose
-    cross product quantizes the space into ``k^m`` cells at the cost
-    of storing ``m·k`` short vectors. The IVF-PQ memory move: a 64-dim
-    float vector becomes ``m`` small ints, so the candidate set of an
-    ANN probe fits in a fraction of the memory and the distance math
-    drops to table lookups (:func:`pq_adc_topk`).
+    """The one Lloyd's loop: ``k`` centroids in each of ``m`` contiguous
+    subspaces (``m=1`` is plain k-means), fitted together. Returns
+    ``[codebook_0, ...]``, each ``[(cell, centroid), ...]``.
 
-    Deterministic like :func:`kmeans_fit` (id-ordered ``init_ids`` or
-    the xxhash64 sample; no RNG state); ``dim % m == 0`` enforced.
-    Returns ``[codebook_0, ..., codebook_{m-1}]``, each a
-    ``[(code, sub_centroid), ...]`` list.
-
-    Scale shape (100 TB): the ``m`` subspace fits are FUSED — every
-    Lloyd's iteration is ONE corpus pass that assigns all ``m``
-    subspaces in the same narrow map and aggregates all update sums in
-    one ``(subspace, cell, dim)``-keyed shuffle of ``k × dim`` partial
-    sums (raw vectors never shuffle). An unfused per-subspace loop
-    would re-scan the corpus ``m`` times per iteration. Values are
-    identical to the per-subspace fit: the assignment rule is the same
-    slice argmin (ties to the lowest code) and the centroid update is
-    the same 1e-9 grid-snapped mean (:func:`kmeans_fit`'s convention,
-    which also absorbs partial-sum order), so the SQL oracle's
-    per-subspace unrolled CTEs still match bit-for-bit.
+    Scale shape per iteration: ONE corpus pass assigns every subspace in
+    the same narrow map (:func:`_nearest` per slice, no shuffle of
+    vectors); the update ``posexplode``s each vector and aggregates one
+    ``sum`` per ``(subspace, cell, dimension)`` key — map-side combine
+    cuts the shuffle to k × dim partial sums per input partition (raw
+    vectors never shuffle), and because the dimension is a grouping
+    VALUE rather than a generated column, the plan holds two aggregate
+    expressions whatever the width. The k × dim means come back to the
+    driver between iterations (a few KB): ``iters`` bounded jobs, plus
+    one init collect. ``cache=True`` (standard Lloyd's practice for a
+    curated feature table) persists the two pruned columns across
+    iterations instead of re-scanning the source each round.
     """
-    import math as _math
-
-    base = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-    if init_ids is not None:
-        rows = _init_rows(base, init_ids, "pq_fit")
-    else:
-        rows = (
-            base.orderBy(F.xxhash64(F.col("cid") + F.lit(seed)))
-            .limit(k)
-            .collect()
-        )
-    # vector width from the init rows themselves on a NON-NULL vector
-    # (a NULL one would previously yield a misleading size()=-1
-    # divisibility error) — the separate .first() dim probe was one
-    # more sequential driver job per fit (guide §5: the driver should
-    # do almost no data work; each round-trip job is pure latency at
-    # any scale). Same fusion as kmeans_fit.
-    probe = next((r for r in rows if r.cvec is not None), None)
-    if probe is None:
-        raise ValueError(
-            "pq_fit: no non-null vectors in input")
-    dim = len(probe.cvec)
+    rows = _seed_rows(df, vec_col, id_col, k, init_ids, seed,
+                      f"{fn}: init_ids")
+    if not rows:
+        raise ValueError(f"{fn}: empty input: no non-null vectors")
+    # vector width from the init rows themselves — a separate .first()
+    # dim probe would be one more sequential driver job per fit
+    dim = len(rows[0])
     if m < 1 or dim % m != 0:
         raise ValueError(
-            f"pq_fit: dim={dim} not divisible into m={m} subspaces")
-    sub = dim // m
+            f"{fn}: dim={dim} not divisible into m={m} subspaces")
     if len(rows) < k:
-        raise ValueError(
-            f"pq_fit: only {len(rows)} init vectors for k={k}")
+        raise ValueError(f"{fn}: only {len(rows)} init vectors for k={k}")
+    sub = dim // m
     books = [
-        [(i, [float(x) for x in r.cvec[s * sub:(s + 1) * sub]])
-         for i, r in enumerate(rows)]
+        [(i, r[s * sub:(s + 1) * sub]) for i, r in enumerate(rows)]
         for s in range(m)
     ]
     work = df.select(id_col, vec_col)
@@ -437,8 +330,9 @@ def pq_fit(
         work = work.persist()
     try:
         for _ in range(iters):
-            bests = _pq_best(F.col(vec_col), books)
-            cells = F.array(*[b.getField("cell") for b in bests])
+            cells = F.array(
+                *[b.getField("cell") for b in _pq_best(F.col(vec_col), books)])
+            part = F.floor(F.col("_i") / F.lit(sub)).cast("int")
             sums = (
                 work.withColumn("_cells", cells)
                 .select(
@@ -446,13 +340,8 @@ def pq_fit(
                     F.posexplode(F.col(vec_col)).alias("_i", "_x"),
                 )
                 .select(
-                    F.floor(F.col("_i") / F.lit(sub)).cast("int")
-                    .alias("_s"),
-                    F.element_at(
-                        "_cells",
-                        F.floor(F.col("_i") / F.lit(sub)).cast("int")
-                        + F.lit(1),
-                    ).alias("_cell"),
+                    part.alias("_s"),
+                    F.element_at("_cells", part + F.lit(1)).alias("_cell"),
                     "_i",
                     "_x",
                 )
@@ -463,10 +352,17 @@ def pq_fit(
                 )
                 .collect()
             )
+            # snap to a 1e-9 grid with floor(x*1e9 + 0.5)/1e9 — the SAME
+            # float ops the oracle's SQL runs, so both engines land on
+            # the identical double even AT grid boundaries (library
+            # round() implementations differ there). Summation order
+            # (partition layout, core count) perturbs the mean only in
+            # the last ulps (~1e-13), far inside the grid step, and the
+            # grid is far finer than any real assignment gap.
             acc: dict[tuple[int, int], dict[int, float]] = {}
             for r in sums:
                 acc.setdefault((r._s, r._cell), {})[r._i - r._s * sub] = (
-                    _math.floor(r._sum / r._n * 1e9 + 0.5) / 1e9
+                    math.floor(r._sum / r._n * 1e9 + 0.5) / 1e9
                 )
             books = [
                 [
@@ -483,38 +379,100 @@ def pq_fit(
     return books
 
 
+def kmeans_fit(
+    df: DataFrame,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    k: int = 16,
+    iters: int = 5,
+    init_ids: list[int] | None = None,
+    seed: int = 42,
+    cache: bool = False,
+) -> list[tuple[int, list[float]]]:
+    """Lloyd's k-means over an embedding column, DataFrame-native.
+
+    The centroid trainer for :func:`build_ivf_index` (IVF quality depends
+    on centroids matching the data distribution, not a random sample).
+    It is :func:`_lloyd` with one subspace, so it equals
+    ``pq_fit(..., m=1)[0]``: assignment is the IVF index's argmin narrow
+    map, the update shuffles k × dim partial sums, ``iters`` bounded
+    jobs. Deterministic: init from ``init_ids`` (id order) or the
+    xxhash64 sample used by the index builder — no RNG state.
+
+    Returns ``[(cell_id, centroid_vector), ...]`` ready to pass as
+    ``build_ivf_index(..., centroids=...)``.
+    """
+    [book] = _lloyd(df, vec_col, id_col, 1, k, iters, init_ids, seed,
+                    cache, "kmeans_fit")
+    return book
+
+
+def kmeans_inertia(
+    df: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> float:
+    """Sum of squared distances to the nearest centroid (fit quality)."""
+    d = _nearest(F.col(vec_col), centroids).getField("d")
+    row = df.agg(F.sum(d)).first()
+    return float(row[0]) if row and row[0] is not None else 0.0
+
+
+def pq_fit(
+    df: DataFrame,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    m: int = 4,
+    k: int = 16,
+    iters: int = 5,
+    init_ids: list[int] | None = None,
+    seed: int = 42,
+    cache: bool = False,
+) -> list[list[tuple[int, list[float]]]]:
+    """Product-quantization codebooks (Jégou, Douze & Schmid 2011,
+    "Product Quantization for Nearest Neighbor Search"): split the
+    vector into ``m`` contiguous subspaces and run k-means in each —
+    ``m`` codebooks of ``k`` centroids whose cross product quantizes the
+    space into ``k^m`` cells at the cost of storing ``m·k`` short
+    vectors. The IVF-PQ memory move: a 64-dim float vector becomes ``m``
+    small ints, so the candidate set of an ANN probe fits in a fraction
+    of the memory and the distance math drops to table lookups
+    (:func:`pq_adc_topk`).
+
+    Deterministic like :func:`kmeans_fit` (id-ordered ``init_ids`` or
+    the xxhash64 sample; no RNG state); ``dim % m == 0`` enforced.
+    Returns ``[codebook_0, ..., codebook_{m-1}]``, each a
+    ``[(code, sub_centroid), ...]`` list.
+
+    Scale shape (100 TB): the ``m`` subspace fits are FUSED in
+    :func:`_lloyd` — every iteration is ONE corpus pass that assigns all
+    ``m`` subspaces and aggregates all update sums in one
+    ``(subspace, cell, dim)``-keyed shuffle; an unfused per-subspace
+    loop would re-scan the corpus ``m`` times per iteration. Values are
+    those of a per-subspace fit (same slice argmin, same 1e-9
+    grid-snapped mean), so the SQL oracle's per-subspace unrolled CTEs
+    still match bit-for-bit.
+    """
+    return _lloyd(df, vec_col, id_col, m, k, iters, init_ids, seed,
+                  cache, "pq_fit")
+
+
 def _pq_best(v, codebooks: list[list[tuple[int, list[float]]]]):
-    """Per-subspace (distance, code) struct-min columns — the
-    build_ivf_index argmin (struct ordering breaks ties to the lowest
-    code) applied to each contiguous slice of ``v``."""
-    m = len(codebooks)
+    """Per-subspace :func:`_nearest` struct columns: the argmin applied
+    to each contiguous slice of ``v``. One codebook spans the whole
+    vector, so ``v`` goes in unsliced: the fold sits inside the
+    per-centroid lambda, where a slice would copy ``v`` once per
+    centroid per row."""
     sub = len(codebooks[0][0][1])
-
-    def sqdist(sv, cv: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                sv, cv,
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    bests = []
-    for s, book in enumerate(codebooks):
-        if len(book[0][1]) != sub:
-            raise ValueError("pq codebooks have unequal subspace widths")
-        sv = F.slice(v, s * sub + 1, sub)
-        ids_lit = F.expr(
-            "array(" + ",".join(str(int(c)) for c, _ in book) + ")")
-        structs = F.transform(
-            _mat_lit([[float(x) for x in cv] for _, cv in book]),
-            lambda cv, i: F.struct(
-                sqdist(sv, cv).alias("d"), F.get(ids_lit, i).alias("cell")
-            ),
-        )
-        bests.append(F.array_min(structs))
-    return bests
+    if any(len(book[0][1]) != sub for book in codebooks):
+        raise ValueError("pq codebooks have unequal subspace widths")
+    if len(codebooks) == 1:
+        return [_nearest(v, codebooks[0])]
+    return [
+        _nearest(F.slice(v, s * sub + 1, sub), book)
+        for s, book in enumerate(codebooks)
+    ]
 
 
 def pq_encode(
@@ -581,16 +539,10 @@ def pq_adc_topk(
         raise ValueError(
             f"pq_adc_topk: query dim {len(query_vec)} != {m * sub}")
 
-    def dist(q: list[float], c: list[float]) -> float:
-        d = 0.0
-        for a, b in zip(q, c):
-            d += (float(a) - float(b)) * (float(a) - float(b))
-        return d
-
     luts = []
     for s, book in enumerate(codebooks):
         q_s = query_vec[s * sub:(s + 1) * sub]
-        luts.append({int(code): dist(q_s, cv) for code, cv in book})
+        luts.append({int(code): _py_sqdist(q_s, cv) for code, cv in book})
     codes = F.col(code_col)
     total = None
     for s, lut in enumerate(luts):
@@ -693,6 +645,50 @@ def _guard_cell_population(
         )
 
 
+def _cell_pairs(
+    df: DataFrame, id_col: str, vec_col: str, k: int, iters: int, init_ids,
+    centroids, max_cell_rows: int | None, op_name: str, keep, round_to: int,
+) -> tuple[DataFrame, Column]:
+    """The within-cell pair stream of :func:`semantic_dedup` and
+    :func:`hard_negative_mining`: fit k-means (or reuse ``centroids``),
+    assign every vector to its cell, run the
+    :func:`_guard_cell_population` check, then self-join each cell's
+    rows on ``keep(_a._sid, _b._sid)``. Norms are projected per ROW
+    before the join: an inline cosine would re-fold each side's norm
+    once per PAIR (O(pairs·dim) instead of O(rows·dim)).
+
+    Returns ``(pairs, cosine)``: the joined sides ``_a``/``_b`` (columns
+    ``_sid``, ``_svec``, ``_snorm``, ``_cell``) and their cosine rounded
+    to ``round_to`` decimals."""
+    if centroids is None:
+        centroids = kmeans_fit(
+            df, k=k, iters=iters, init_ids=init_ids,
+            vec_col=vec_col, id_col=id_col, cache=True,
+        )
+    assigned, _ = build_ivf_index(
+        df, centroids=centroids, vec_col=vec_col, id_col=id_col
+    )
+    _guard_cell_population(assigned, max_cell_rows, op_name)
+    sides = assigned.select(
+        F.col(id_col).alias("_sid"),
+        F.col(vec_col).alias("_svec"),
+        norm(F.col(vec_col)).alias("_snorm"),
+        "_cell",
+    )
+    a, b = sides.alias("_a"), sides.alias("_b")
+    cos = F.round(
+        _cosine(F.col("_a._svec"), F.col("_b._svec"),
+                F.col("_a._snorm"), F.col("_b._snorm")),
+        round_to,
+    )
+    pairs = a.join(
+        b,
+        (F.col("_a._cell") == F.col("_b._cell"))
+        & keep(F.col("_a._sid"), F.col("_b._sid")),
+    )
+    return pairs, cos
+
+
 def hard_negative_mining(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -719,16 +715,11 @@ def hard_negative_mining(
     convention as the dedup stack).
 
     Scale shape (100 TB): candidates come from the SAME k-means cell
-    as the anchor (the :func:`semantic_dedup` bucketing — quadratic
-    only within a cell, raw vectors never shuffle for the fit), norms
-    are hoisted per row before the self-join, and the per-anchor
+    as the anchor (:func:`_cell_pairs`, the :func:`semantic_dedup`
+    bucketing and its ``max_cell_rows`` guard), and the per-anchor
     top-n is one anchor-keyed window over the band-filtered pairs
     (band selectivity, not cell size, bounds the exchange). Pass
     precomputed ``centroids`` to reuse one fit across band sweeps.
-    ``max_cell_rows`` is the same degenerate-fit guard as
-    :func:`semantic_dedup`: a collapsed fit silently turns the
-    within-cell self-join back into all-pairs, so bound the cell
-    population and fail loud (see :func:`_guard_cell_population`).
     """
     from pyspark.sql.window import Window
 
@@ -736,39 +727,13 @@ def hard_negative_mining(
         raise ValueError("need 0 <= lo < hi")
     if per_anchor < 1:
         raise ValueError("per_anchor must be >= 1")
-    if centroids is None:
-        cents = kmeans_fit(
-            df, k=k, iters=iters, init_ids=init_ids,
-            vec_col=vec_col, id_col=id_col, cache=True,
-        )
-    else:
-        cents = centroids
-    assigned, _ = build_ivf_index(
-        df, centroids=cents, vec_col=vec_col, id_col=id_col
-    )
-    _guard_cell_population(
-        assigned, max_cell_rows, "hard_negative_mining")
-    sides = assigned.select(
-        F.col(id_col).alias("_sid"),
-        F.col(vec_col).alias("_svec"),
-        norm(F.col(vec_col)).alias("_snorm"),
-        "_cell",
-    )
-    a, b = sides.alias("_a"), sides.alias("_b")
-    denom = F.col("_a._snorm") * F.col("_b._snorm")
-    cos = F.round(
-        F.when(denom == 0, F.lit(0.0)).otherwise(
-            dot_product(F.col("_a._svec"), F.col("_b._svec")) / denom
-        ),
-        round_to,
+    pairs, cos = _cell_pairs(
+        df, id_col, vec_col, k=k, iters=iters, init_ids=init_ids,
+        centroids=centroids, max_cell_rows=max_cell_rows,
+        op_name="hard_negative_mining", keep=operator.ne, round_to=round_to,
     )
     banded = (
-        a.join(
-            b,
-            (F.col("_a._cell") == F.col("_b._cell"))
-            & (F.col("_a._sid") != F.col("_b._sid")),
-        )
-        .select(
+        pairs.select(
             F.col("_a._sid").alias("anchor"),
             F.col("_b._sid").alias("negative"),
             cos.alias("cosine"),
@@ -810,15 +775,7 @@ def ivf_pq_topk(
     the two cuts compose multiplicatively. Plan: pruned scan + ONE
     global top-k (TakeOrderedAndProject), no shuffle, no join.
     """
-    def dist(c: list[float]) -> float:
-        # sequential IEEE fold — the ivf_topk determinism rule
-        d = 0.0
-        for a, b in zip(c, query_vec):
-            d += (a - b) * (a - b)
-        return d
-
-    probe = sorted(centroids, key=lambda ic: dist(ic[1]))[:nprobe]
-    cells = [i for i, _ in probe]
+    cells = _probe_cells(centroids, query_vec, nprobe)
     return pq_adc_topk(
         assigned.filter(F.col("_cell").isin(cells)),
         codebooks,
@@ -868,54 +825,20 @@ def semantic_dedup(
     Pass precomputed ``centroids`` (from :func:`kmeans_fit`) to reuse
     one fit across threshold sweeps.
 
-    ``max_cell_rows`` guards the quadratic: a degenerate fit (bad
-    ``k``, collapsed centroids) can put most vectors in ONE cell and
-    silently reintroduce the all-pairs join the clustering exists to
-    prevent. When set, a cheap count-by-cell job (k rows, one
-    partial-agg shuffle of cluster ids) runs before the pair join and
-    raises ``ValueError`` naming the offending cell and its population
-    — an actionable error instead of an O(n²/k) blowup at 100 TB.
-    Sizing rule: the pair join does ~``rows²/2`` cosine folds per cell,
+    ``max_cell_rows`` guards the quadratic against a degenerate fit
+    (see :func:`_guard_cell_population`). Sizing rule: the pair join does ~``rows²/2`` cosine folds per cell,
     so bound it by what one executor core should absorb (e.g. 100_000
     rows ≈ 5e9 folds per hot cell).
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
-    if centroids is None:
-        cents = kmeans_fit(
-            df, k=k, iters=iters, init_ids=init_ids,
-            vec_col=vec_col, id_col=id_col, cache=True,
-        )
-    else:
-        cents = centroids
-    assigned, _ = build_ivf_index(
-        df, centroids=cents, vec_col=vec_col, id_col=id_col
-    )
-    _guard_cell_population(assigned, max_cell_rows, "semantic_dedup")
-    # norms are projected per ROW before the self-join: computing
-    # cosine_similarity() inline would re-fold each side's norm once per
-    # PAIR (O(pairs·dim) instead of O(rows·dim))
-    sides = assigned.select(
-        F.col(id_col).alias("_sid"),
-        F.col(vec_col).alias("_svec"),
-        norm(F.col(vec_col)).alias("_snorm"),
-        "_cell",
-    )
-    a, b = sides.alias("_a"), sides.alias("_b")
-    denom = F.col("_a._snorm") * F.col("_b._snorm")
-    cos = F.round(
-        F.when(denom == 0, F.lit(0.0)).otherwise(
-            dot_product(F.col("_a._svec"), F.col("_b._svec")) / denom
-        ),
-        6,
+    pairs, cos = _cell_pairs(
+        df, id_col, vec_col, k=k, iters=iters, init_ids=init_ids,
+        centroids=centroids, max_cell_rows=max_cell_rows,
+        op_name="semantic_dedup", keep=operator.lt, round_to=6,
     )
     losers = (
-        a.join(
-            b,
-            (F.col("_a._cell") == F.col("_b._cell"))
-            & (F.col("_a._sid") < F.col("_b._sid")),
-        )
-        .filter(cos >= F.lit(float(threshold)))
+        pairs.filter(cos >= F.lit(float(threshold)))
         .select(F.col("_b._sid").alias(id_col))
         .distinct()
     )
@@ -1013,17 +936,7 @@ def semantic_decontaminate(
     )
 
     def fold_step(acc: Column, b: Column) -> Column:
-        d = F.aggregate(
-            F.zip_with(
-                dvec, b["bv"], lambda x, y: x.cast("double") * y
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        den = F.col("_dn") * b["bn"]
-        c = F.round(
-            F.when(den == 0, F.lit(0.0)).otherwise(d / den), 6
-        )
+        c = F.round(_cosine(dvec, b["bv"], F.col("_dn"), b["bn"]), 6)
         take = (
             acc["max_cosine"].isNull()
             | (c > acc["max_cosine"])
@@ -1181,12 +1094,8 @@ def retrieval_metrics(
             "query_id",
             "n_rel",
             F.round(
-                F.when(
-                    (F.col("_cn") * F.col("_qn")) == 0, F.lit(0.0)
-                ).otherwise(
-                    dot_product(F.col("_cvec"), F.col("_qvec"))
-                    / (F.col("_cn") * F.col("_qn"))
-                ),
+                _cosine(F.col("_cvec"), F.col("_qvec"),
+                        F.col("_cn"), F.col("_qn")),
                 6,
             ).alias("_score"),
             (F.col("_clbl") == F.col("_qlbl")).alias("_rel"),
@@ -1363,15 +1272,13 @@ def random_projection(
     Python, no fitted state to broadcast (the planes are compile-time
     constants). NULL vectors project to NULL.
     """
-    import math as _math
-
     from .dedup import _MERSENNE31, _hash_coeffs31
 
     if out_dim < 1:
         raise ValueError("out_dim must be >= 1")
     out = out_col or f"{vec_col}_proj"
     v = F.col(vec_col)
-    inv = 1.0 / _math.sqrt(float(out_dim))
+    inv = 1.0 / math.sqrt(float(out_dim))
     coeffs = _hash_coeffs31(out_dim, seed)
 
     def component(a_p: int, b_p: int) -> Column:

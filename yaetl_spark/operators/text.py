@@ -254,34 +254,42 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalize_ws_case(text))
 
 
+_MERSENNE31 = (1 << 31) - 1
+
+
+def rolling_hash_raw(s: Column, base: int = 31, mod: int = _MERSENNE31) -> Column:
+    """Polynomial hash of a string column, NO normalization (for already-
+    normalized shingles): ``h = (h * base + codepoint) % mod`` folded
+    left-to-right over the characters. ``mod`` defaults to the Mersenne
+    prime 2^31-1 so ``h * base + c`` stays far inside signed-64-bit (no
+    overflow, exact in any engine). Exactly replicable in SQL via
+    ``list_reduce``."""
+    codes = F.transform(
+        F.sequence(F.lit(1), F.length(s)),
+        lambda i: F.ascii(s.substr(i, F.lit(1))).cast("bigint"),
+    )
+    return F.when(F.length(s) == 0, F.lit(0).cast("bigint")).otherwise(
+        F.aggregate(
+            codes,
+            F.lit(0).cast("bigint"),
+            lambda h, c: F.pmod(h * F.lit(base) + c, F.lit(mod)),
+        )
+    )
+
+
 def rolling_fingerprint(
-    text: Column, base: int = 31, mod: int = 2147483647
+    text: Column, base: int = 31, mod: int = _MERSENNE31
 ) -> Column:
-    """Polynomial rolling-hash fingerprint of the normalized text.
-
-    ``h = (h * base + codepoint) % mod`` folded left-to-right over the
-    characters — the classic Rabin-Karp document fingerprint. ``mod``
-    defaults to the Mersenne prime 2^31-1 so ``h * base + c`` stays far
-    inside signed-64-bit (no overflow, exact in any engine). Pure
-    expression fold (JVM-side); identical SQL exists in DuckDB via
-    ``list_reduce`` (oracle-checkable, unlike xxhash64/md5-based schemes).
+    """Polynomial rolling-hash fingerprint of the normalized text: the
+    classic Rabin-Karp document fingerprint, :func:`rolling_hash_raw`
+    over :func:`normalize_ws_case`. Pure expression fold (JVM-side);
+    identical SQL exists in DuckDB via ``list_reduce`` (oracle-checkable,
+    unlike xxhash64/md5-based schemes).
     """
-    def fold(norm: Column) -> Column:
-        codes = F.transform(
-            F.sequence(F.lit(1), F.length(norm)),
-            lambda i: F.ascii(norm.substr(i, F.lit(1))).cast("bigint"),
-        )
-        return F.when(F.length(norm) == 0, F.lit(0).cast("bigint")).otherwise(
-            F.aggregate(
-                codes,
-                F.lit(0).cast("bigint"),
-                lambda h, c: F.pmod(h * F.lit(base) + c, F.lit(mod)),
-            )
-        )
-
     # bind the normalized string once: referencing the regexp_replace
     # inline would re-run it for every character position
-    return let_once(normalize_ws_case(text), fold)
+    return let_once(normalize_ws_case(text),
+                    lambda n: rolling_hash_raw(n, base, mod))
 
 
 def bpe_token_count(text: Column, pattern: str = TOKEN_SPLIT) -> Column:
@@ -331,8 +339,6 @@ def token_count_estimate(
     the fold are the same SQL-replicable primitives the dedup stack
     uses), no UDF, no tokenizer binary.
     """
-    from .dedup import rolling_hash_raw
-
     if not 0 <= vocab_permille <= 1000:
         raise ValueError("vocab_permille must be in [0, 1000]")
     if piece_chars < 1:
