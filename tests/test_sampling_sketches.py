@@ -321,6 +321,30 @@ def test_empty_centroid_set_raises(spark):
         kmeans_inertia(one, [])
 
 
+def test_sampled_init_string_ids_partition_invariant_under_ansi(spark):
+    """The sampled init orders string ids by ``xxhash64(id, seed)``:
+    ``id + seed`` casts a string to NULL (every row would hash alike,
+    so the sample followed the partitioning) and raises under ANSI."""
+    import numpy as np
+
+    from yaetl_spark.operators import build_ivf_index
+
+    rng = np.random.RandomState(8)
+    df = spark.createDataFrame(
+        [(chr(ord("a") + i), rng.standard_normal(3).tolist())
+         for i in range(12)], "vec_id string, embedding array<double>")
+    _, cents = build_ivf_index(df, num_cells=3)
+    _, again = build_ivf_index(df.repartition(3), num_cells=3)
+    assert cents == again
+    prior = spark.conf.get("spark.sql.ansi.enabled", "false")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        _, ansi = build_ivf_index(df.repartition(3), num_cells=3)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    assert ansi == cents
+
+
 def test_kmeans_high_dim_update_is_dim_independent(spark):
     """dim=256: the posexplode update keeps the plan at two aggregate
     expressions total (count + sum over the exploded value) instead of

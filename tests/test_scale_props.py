@@ -292,6 +292,11 @@ def test_hash_heavy_queries_survive_ansi_mode(spark):
         # (rn·B + n stays far below 2^62) and target = N·num + den
         # (den capped at 1000 in-operator)
         "cluster_cap", "sketch_quantiles",
+        # the drift family beside ks_drift: shares divide by side
+        # totals and DECIMAL(38,*) term sums fold per cell
+        "distribution_shift", "categorical_shift", "equi_width",
+        "summary_w1_distance", "summary_ks_distance", "summary_psi",
+        "summary_psi_by_source", "stream_psi",
     ]
     queries = entry_mod.queries()
     _prior_ansi = spark.conf.get("spark.sql.ansi.enabled", "false")

@@ -426,6 +426,104 @@ def test_categorical_shift_lumping_null_and_novel(spark):
         categorical_shift(ref, ref, "v", top_k=0)
 
 
+@pytest.fixture
+def ansi(spark, request):
+    """Run the test with ``spark.sql.ansi.enabled`` set to the param,
+    restoring the session's value afterwards."""
+    prior = spark.conf.get("spark.sql.ansi.enabled", "false")
+    spark.conf.set("spark.sql.ansi.enabled", request.param)
+    try:
+        yield request.param
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"], indirect=True)
+@pytest.mark.parametrize("empty_side", ["ref", "cur"])
+@pytest.mark.parametrize("op", ["distribution_shift", "categorical_shift"])
+def test_drift_shift_empty_side_is_null(spark, ansi, empty_side, op):
+    """An empty side NULLs psi / kl_ref_cur / js and the detail shares
+    and psi_term (the summary_* contract) while the counts stay; no
+    ``count / total`` share divides by the zero total, so an ANSI
+    session does not raise."""
+    import yaetl_spark.operators as ops
+
+    fn = getattr(ops, op)
+    full = spark.createDataFrame(
+        [(float(i % 7), f"c{i % 3}") for i in range(20)],
+        "x double, c string")
+    empty = full.limit(0)
+    ref, cur = (empty, full) if empty_side == "ref" else (full, empty)
+    col = "x" if op == "distribution_shift" else "c"
+    row = fn(ref, cur, col).first()
+    assert (row["n_ref"], row["n_cur"]) == (
+        (0, 20) if empty_side == "ref" else (20, 0))
+    assert (row["psi"], row["kl_ref_cur"], row["js"]) == (None, None, None)
+    det = fn(ref, cur, col, detail=True).collect()
+    assert sum(r["n_ref"] + r["n_cur"] for r in det) == 20
+    assert {(r["p_ref"], r["p_cur"], r["psi_term"]) for r in det} == {
+        (None, None, None)}
+
+
+def test_categorical_shift_over_buckets_is_distribution_shift(spark):
+    """categorical_shift over the bucket ids distribution_shift assigns
+    gives the same counts and divergences: both fold one cell table
+    through the same smoothed shares and rounded terms."""
+    from yaetl_spark.operators import categorical_shift, distribution_shift
+
+    rng = np.random.RandomState(3)
+    ref_v = [float(v) for v in rng.uniform(0, 100, 300)]
+    cur_v = [float(v) for v in rng.normal(70, 25, 200)]
+    k = 8
+    mn, mx = min(ref_v), max(ref_v)
+    w = (mx - mn) / float(k)
+
+    def frame(vals):
+        # distribution_shift's clamped equi-width cell, as a category
+        return spark.createDataFrame(
+            [(v, str(min(k - 1, max(0, int(np.floor((v - mn) / w))))))
+             for v in vals], "x double, b string")
+
+    ref, cur = frame(ref_v), frame(cur_v)
+    assert ref.select("b").distinct().count() == k  # no __other__ lump
+    cols = ["n_ref", "n_cur", "psi", "kl_ref_cur", "js"]
+    want = distribution_shift(ref, cur, "x", buckets=k).select(cols).first()
+    got = categorical_shift(ref, cur, "b", top_k=k).select(cols).first()
+    assert got == want
+    assert want["psi"] > 0.1
+
+
+@pytest.mark.parametrize("by", [[], ["k"]])
+def test_ks_test_is_summary_ks_distance_over_unit_points(spark, by):
+    """ks_test over raw values equals summary_ks_distance over the same
+    values as unit-weight (value, 1) points: both take the max gap of
+    one tie-collapsed two-sample CDF."""
+    from yaetl_spark.operators import ks_test, summary_ks_distance
+
+    rng = np.random.default_rng(12)
+
+    def frame(loc, n):
+        return spark.createDataFrame(
+            [(f"k{i % 2}", float(np.round(v, 1)))
+             for i, v in enumerate(rng.normal(loc, 1, n))],
+            "k string, v double")
+
+    a, b = frame(0.0, 150), frame(0.4, 110)
+
+    def unit(df):
+        return df.select(*by, F.col("v").alias("value"),
+                         F.lit(1).alias("weight"))
+
+    got = sorted(
+        tuple(r) for r in ks_test(a, b, "v", by).select(
+            *by, "n_ref", "n_cur", "ks_d").collect())
+    want = sorted(
+        tuple(r) for r in summary_ks_distance(
+            unit(a), unit(b), round_to=6, keys=by).collect())
+    assert got == want
+    assert len(got) == (2 if by else 1) and all(r[-1] > 0 for r in got)
+
+
 # --- ks_test ----------------------------------------------------------------
 
 

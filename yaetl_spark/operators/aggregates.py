@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .stats import _equi_width_cell
 from .transformers import Transformer
 
 
@@ -365,19 +366,10 @@ def equi_width_histogram(
         F.round(F.max(x), round_to).alias("_mx"),
     )
     tagged = attach_scalars(df.filter(x.isNotNull()), mm_row, col)
-    width = (F.col("_mx") - F.col("_mn")) / F.lit(float(nbins))
-    # clamp BOTH ends: _mn/_mx are rounded, so a true min that rounds UP
-    # would otherwise index floor(negative/width) = -1, and a true max
-    # that rounds DOWN would index nbins — both violate 0..nbins-1
-    bin_ = F.when(F.col("_mx") == F.col("_mn"), F.lit(0)).otherwise(
-        F.least(
-            F.lit(nbins - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor((x - F.col("_mn")) / width).cast("int"),
-            ),
-        )
-    )
+    # clamped at BOTH ends: _mn/_mx are rounded, so a true min that
+    # rounds UP would otherwise index -1 and a true max that rounds
+    # DOWN would index nbins
+    bin_ = _equi_width_cell(x, F.col("_mn"), F.col("_mx"), nbins)
     return (
         tagged.groupBy(bin_.alias("bin"), F.col("_mn"), F.col("_mx"))
         .agg(F.count(F.lit(1)).alias("n"))

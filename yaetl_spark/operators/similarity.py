@@ -12,7 +12,8 @@ oracle) together:
   the bit-identical driver-side IEEE loop. ``_nearest``: the
   ``(d, cell)`` struct-min argmin over a centroid literal.
 - ``_seed_rows``: init vectors, the listed ids in id order or the
-  ``xxhash64(id + seed)`` sample. ``_lloyd``: the one Lloyd's loop
+  ``xxhash64(id + seed)`` sample (``xxhash64(id, seed)`` for a
+  non-numeric id). ``_lloyd``: the one Lloyd's loop
   (``m`` fused subspaces, grid-snapped means). ``_probe_cells``: the
   ``nprobe`` cells nearest a query. ``_cell_pairs``: fit or reuse
   centroids, assign, guard the cell population, and self-join within
@@ -38,6 +39,7 @@ import operator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 
 def dot_product(a: Column, b: Column) -> Column:
@@ -179,7 +181,12 @@ def _seed_rows(
 ) -> list[list[float]]:
     """Init vectors: those of the listed ``ids`` in id order (the order
     ``.orderBy(id)`` gives), else the first ``n`` non-NULL vectors in
-    ``xxhash64(id + seed)`` order (one pass, reproducible, no RNG).
+    ``xxhash64(id + seed)`` order for a numeric id and
+    ``xxhash64(id, seed)`` order for any other id type (one pass,
+    reproducible, no RNG). ``id + seed`` casts a non-number string id
+    to NULL, so all rows would hash alike and the sample would follow
+    the partitioning (ANSI raises). Numeric ids keep the ``+`` form so
+    their sampled inits do not move.
 
     Listed rows are collected unordered and sorted on the driver:
     ``.orderBy().collect()`` pays a range-partitioning SAMPLING job
@@ -191,9 +198,13 @@ def _seed_rows(
     its id parameter in these errors."""
     base = df.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
     if ids is None:
+        cid = F.col("cid")
+        numeric = isinstance(base.schema["cid"].dataType, NumericType)
+        key = (F.xxhash64(cid + F.lit(seed)) if numeric
+               else F.xxhash64(cid, F.lit(seed)))
         rows = (
             base.filter(F.col("cvec").isNotNull())
-            .orderBy(F.xxhash64(F.col("cid") + F.lit(seed)))
+            .orderBy(key)
             .limit(n)
             .collect()
         )

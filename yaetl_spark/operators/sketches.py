@@ -11,6 +11,13 @@ users last quarter" from a 100 TB reshuffle into a merge of 90 daily
 1.5 KB sketches. ``hll_rollup`` + ``hll_merge`` encode exactly that
 two-level pattern with Spark's built-in ``hll_sketch_agg`` /
 ``hll_union_agg`` (JVM Datasketches, map-side combined, no UDFs).
+
+Drift core: the ``summary_*`` distances use the helpers in ``stats``
+(``_cdf_stage``, ``_both_sides``, ``_dsum``) that ``stats.ks_test`` and
+the raw drift operators use too, so a raw and a summary statistic share
+each rule. ``_rank_cut_sql`` here is the one exact weighted rank cut
+``min(case when cum >= ceil(N·num/den) then v end)``, used by
+:func:`summary_quantiles` and :func:`summary_psi`.
 """
 
 from __future__ import annotations
@@ -19,6 +26,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .stats import _both_sides, _cdf_stage, _dsum
 
 
 def approx_distinct(
@@ -110,24 +119,21 @@ def _quantile_labels(probabilities: Sequence[float]) -> list[str]:
     return labels
 
 
-def _exact_ceil_div(x: Column, den: Column) -> Column:
-    """``ceil(x / den)`` for non-negative integer columns via true
-    integral division (``div``) — exact for ``x ≤ int64max − den + 1``
-    (the ``x + den − 1`` pre-add overflows past that; under this
-    engine's ANSI sessions that THROWS rather than wrapping to a wrong
-    answer), with no double-rounding seam anywhere (the
-    ``(x − x mod n)/n`` form used previously was exact only below 2^53
-    because Spark's ``/`` casts bigint operands to double). All current
-    callers pass row counts / rank targets, far below the boundary."""
-    return F.call_function("div", x + den - F.lit(1).cast("bigint"), den)
-
-
 def _ceil_div_sql(x_sql: str, den_sql: str) -> str:
-    """:func:`_exact_ceil_div` as a SQL fragment for one-shot
-    ``F.expr`` parses (the stats._dsum_sql note: a Column call is a
-    Python→JVM round trip; a parse of a large fragment is one). Same
-    ``div`` integral-division arithmetic, same operand order."""
+    """``ceil(x / den)`` for non-negative integers as a SQL fragment via
+    integral ``div``: exact up to ``x ≤ int64max − den + 1`` (past that
+    the pre-add overflows, which ANSI raises), with no double-rounding
+    seam (Spark's ``/`` casts bigint to double, exact below 2^53)."""
     return f"div({x_sql} + {den_sql} - cast(1 as bigint), {den_sql})"
+
+
+def _rank_cut_sql(cum: str, n: str, num: int, den: int, v: str) -> str:
+    """The exact weighted rank cut as an aggregate SQL fragment: the
+    smallest ``v`` whose cumulative weight ``cum`` reaches
+    ``ceil(n·num/den)`` (:func:`_ceil_div_sql`), so ``num/den = p``
+    answers the ``p`` quantile of a value-ordered weighted CDF."""
+    target = _ceil_div_sql(f"{n} * {num}", f"cast({den} as bigint)")
+    return f"min(case when {cum} >= {target} then {v} end)"
 
 
 def _dlit(v: float) -> str:
@@ -450,83 +456,15 @@ def summary_quantiles(
         F.sum(wgt).over(wcum).alias("_sq_cum"),
         F.sum(wgt).over(wtot).alias("_sq_n"),
     )
-    aggs = [F.max("_sq_n").alias(n_col)]
-    for lab, (num, den) in zip(labels, fracs):
-        # target = ceil(N·num/den) via true integral division — exact
-        # over the whole int64 range (N·num stays inside int64 for
-        # den ≤ 10^3 up to ~9.2e15 rows — far past any corpus); one
-        # parse per probability instead of ~15 Column calls
-        target = _ceil_div_sql(f"_sq_n * {num}", f"cast({den} as bigint)")
-        aggs.append(F.expr(
-            f"min(case when _sq_cum >= {target} then _sq_v end) "
-            f"as `{lab}`"))
+    # N·num stays inside int64 for den ≤ 10^3 up to ~9.2e15 rows — far
+    # past any corpus; one parse per probability instead of ~15 Column
+    # calls
+    aggs = [F.max("_sq_n").alias(n_col)] + [
+        F.expr(f"{_rank_cut_sql('_sq_cum', '_sq_n', num, den, '_sq_v')} "
+               f"as `{lab}`")
+        for lab, (num, den) in zip(labels, fracs)
+    ]
     return base.groupBy(*keys).agg(*aggs)
-
-
-def _summary_cdf_stage(
-    a: DataFrame,
-    b: DataFrame,
-    value_col: str,
-    weight_col: str,
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """Shared staging for the persisted-summary drift family
-    (:func:`summary_w1_distance`, :func:`summary_ks_distance`,
-    :func:`summary_psi`): union the two weighted summaries, collapse
-    tied breakpoints, and emit one row per distinct breakpoint with
-    both point weights (``_w1_wa``/``_w1_wb``), both cumulative
-    weights (``_w1_ca``/``_w1_cb``), the next breakpoint
-    (``_w1_next``), and both totals (``_w1_na``/``_w1_nb``).
-    With ``keys`` everything is evaluated per key group (both inputs
-    must carry the key columns; a key present on only one side gets a
-    zero total on the other, which the callers NULL out). Everything
-    is summary-sized: one hash aggregate on (keys, breakpoint) plus
-    one keys-partitioned window over |summary_a| + |summary_b| rows."""
-    from pyspark.sql.window import Window
-
-    keys = list(keys)
-    va = a.select(
-        *keys,
-        F.col(value_col).cast("double").alias("_w1_v"),
-        F.col(weight_col).cast("bigint").alias("_w1_wa"),
-        F.lit(0).cast("bigint").alias("_w1_wb"),
-    )
-    vb = b.select(
-        *keys,
-        F.col(value_col).cast("double").alias("_w1_v"),
-        F.lit(0).cast("bigint").alias("_w1_wa"),
-        F.col(weight_col).cast("bigint").alias("_w1_wb"),
-    )
-    # collapse ties FIRST so each breakpoint appears once per side mix
-    pts = (
-        va.unionByName(vb)
-        .groupBy(*keys, "_w1_v")
-        .agg(F.sum("_w1_wa").alias("_w1_wa"),
-             F.sum("_w1_wb").alias("_w1_wb"))
-    )
-    # window expressions as one-shot parses (stats._dsum_sql note) —
-    # same frames, same functions
-    part = ("partition by " + ", ".join(
-        "`" + k.replace("`", "``") + "`" for k in keys)) if keys else ""
-    cum_frame = (f"over ({part} order by _w1_v asc rows between "
-                 "unbounded preceding and current row)")
-    lead_over = f"over ({part} order by _w1_v asc)"
-    cum = pts.select(
-        *keys,
-        "_w1_v",
-        "_w1_wa",
-        "_w1_wb",
-        F.expr(f"sum(_w1_wa) {cum_frame} as _w1_ca"),
-        F.expr(f"sum(_w1_wb) {cum_frame} as _w1_cb"),
-        F.expr(f"lead(_w1_v) {lead_over} as _w1_next"),
-    )
-    full_frame = (f"over ({part} order by _w1_v asc rows between "
-                  "unbounded preceding and unbounded following)")
-    return cum.select(
-        "*",
-        F.expr(f"max(_w1_ca) {full_frame} as _w1_na"),
-        F.expr(f"max(_w1_cb) {full_frame} as _w1_nb"),
-    )
 
 
 def summary_w1_distance(
@@ -567,33 +505,19 @@ def summary_w1_distance(
     them.
     """
     keys = list(keys)
-    staged = _summary_cdf_stage(a, b, value_col, weight_col, keys)
+    staged = _cdf_stage(a, b, F.col(value_col), F.col(weight_col), keys)
     # per-interval |F_a - F_b| * dx, rounded then summed as DECIMAL so
     # the float fold is order-independent (the stats.py convention);
-    # guarded in-expression: the last breakpoint has no interval
-    # (lead NULL -> term NULL, sum skips it) and an empty side must
-    # never reach the division (Inf would throw on the ANSI cast)
-    term = F.expr(
-        f"cast(case when _w1_na > 0 and _w1_nb > 0 "
-        f"and _w1_next is not null then "
-        f"round(abs(cast(_w1_ca as double) / _w1_na "
-        f"- cast(_w1_cb as double) / _w1_nb) * (_w1_next - _w1_v), "
-        f"{round_to}) end as decimal(38,{round_to}))")
-    out = staged.groupBy(*keys).agg(
-        F.max("_w1_na").alias("n_a"),
-        F.max("_w1_nb").alias("n_b"),
-        F.sum(term).cast("double").alias(out_col),
-    )
+    # the last breakpoint has no interval (lead NULL -> term NULL, the
+    # sum skips it) and an empty side has a NULL gap
+    term = F.expr("_cdf_gap * (_cdf_next - _cdf_v)")
+    n_a, n_b = F.max("_cdf_na"), F.max("_cdf_nb")
     # zero intervals (all mass at one point) -> distance 0 when both
-    # sides are present; NULL when either side is empty/absent
-    return out.select(
-        *keys,
-        "n_a", "n_b",
-        F.when(
-            F.col("n_a").isNull() | F.col("n_b").isNull()
-            | (F.col("n_a") == 0) | (F.col("n_b") == 0),
-            F.lit(None).cast("double"),
-        ).otherwise(F.coalesce(F.col(out_col), F.lit(0.0)))
+    # sides are present
+    return staged.groupBy(*keys).agg(
+        n_a.alias("n_a"),
+        n_b.alias("n_b"),
+        _both_sides(n_a, n_b, F.coalesce(_dsum(term, round_to), F.lit(0.0)))
         .alias(out_col),
     )
 
@@ -629,31 +553,17 @@ def summary_ks_distance(
 
     Scale shape: identical to :func:`summary_w1_distance` — the union,
     the (keys-partitioned) window, and the aggregate are all
-    summary-sized (shared staging, :func:`_summary_cdf_stage`).
+    summary-sized (shared staging, ``stats._cdf_stage``).
     """
     keys = list(keys)
-    staged = _summary_cdf_stage(a, b, value_col, weight_col, keys)
-    # |F_a - F_b| at each breakpoint; the empty-side guard keeps the
-    # division unreachable when a total is 0 (ANSI-safe, like W1) —
-    # every breakpoint row is a valid evaluation point (no lead/next
-    # needed: the gap is constant on [v, next) and attained AT v)
-    gap = F.expr(
-        f"case when _w1_na > 0 and _w1_nb > 0 then "
-        f"round(abs(cast(_w1_ca as double) / _w1_na "
-        f"- cast(_w1_cb as double) / _w1_nb), {round_to}) end")
-    out = staged.groupBy(*keys).agg(
-        F.max("_w1_na").alias("n_a"),
-        F.max("_w1_nb").alias("n_b"),
-        F.max(gap).alias(out_col),
-    )
-    return out.select(
-        *keys,
-        "n_a", "n_b",
-        F.when(
-            F.col("n_a").isNull() | F.col("n_b").isNull()
-            | (F.col("n_a") == 0) | (F.col("n_b") == 0),
-            F.lit(None).cast("double"),
-        ).otherwise(F.col(out_col)).alias(out_col),
+    # every breakpoint is a valid evaluation point (no lead/next
+    # needed: the gap is constant on [v, next) and attained AT v); an
+    # empty side's NULL gaps leave a NULL max
+    staged = _cdf_stage(a, b, F.col(value_col), F.col(weight_col), keys)
+    return staged.groupBy(*keys).agg(
+        F.max("_cdf_na").alias("n_a"),
+        F.max("_cdf_nb").alias("n_b"),
+        F.max(F.round("_cdf_gap", round_to)).alias(out_col),
     )
 
 
@@ -698,7 +608,7 @@ def summary_psi(
 
     Scale shape: identical to the siblings — staging, the one-row cut
     aggregate, the broadcast bin assignment, and the ``bins``-row
-    spine are all summary-sized (:func:`_summary_cdf_stage`).
+    spine are all summary-sized (``stats._cdf_stage``).
     """
     if bins < 2:
         raise ValueError("bins must be >= 2")
@@ -707,42 +617,35 @@ def summary_psi(
             "laplace must be > 0 (smoothing keeps empty bins out of "
             "ln(0) — pass e.g. 0.5)")
     keys = list(keys)
-    staged = _summary_cdf_stage(a, b, value_col, weight_col, keys)
+    staged = _cdf_stage(a, b, F.col(value_col), F.col(weight_col), keys)
     # one aggregate row per key group: both totals + the bins-1
-    # reference cuts (the summary_quantiles arithmetic at p = i/bins
-    # over side a's CDF)
-    # one parse per cut instead of ~30 Column calls (stats._dsum_sql
-    # note) — identical div-based rank-target arithmetic
-    cut_aggs = [
-        F.max("_w1_na").alias("_psi_na"),
-        F.max("_w1_nb").alias("_psi_nb"),
-    ]
-    for i in range(1, bins):
-        target = _ceil_div_sql(
-            f"_w1_na * {i}", f"cast({bins} as bigint)")
-        cut_aggs.append(F.expr(
-            f"min(case when _w1_ca >= {target} then _w1_v end) "
-            f"as _psi_e{i}"))
-    cuts = staged.groupBy(*keys).agg(*cut_aggs)
+    # reference cuts (the summary_quantiles rank cut at p = i/bins over
+    # side a's CDF), one parse per cut
+    cuts = staged.groupBy(*keys).agg(
+        F.max("_cdf_na").alias("_psi_na"),
+        F.max("_cdf_nb").alias("_psi_nb"),
+        *[F.expr(f"{_rank_cut_sql('_cdf_ca', '_cdf_na', i, bins, '_cdf_v')}"
+                 f" as _psi_e{i}") for i in range(1, bins)],
+    )
     edges = ", ".join(f"_psi_e{i}" for i in range(1, bins))
     # bin(v) = 1 + #cuts strictly below v — broadcast of the
     # one-row-per-key cuts
-    pts = staged.select(*keys, "_w1_v", "_w1_wa", "_w1_wb")
+    pts = staged.select(*keys, "_cdf_v", "_cdf_wa", "_cdf_wb")
     joined = (
         pts.join(F.broadcast(cuts), keys) if keys
         else pts.crossJoin(F.broadcast(cuts))
     )
     binned = joined.select(
         *keys,
-        "_w1_wa",
-        "_w1_wb",
+        "_cdf_wa",
+        "_cdf_wb",
         F.expr(
             f"1 + size(filter(array({edges}), "
-            "e -> e is not null and _w1_v > e)) as _psi_bin"),
+            "e -> e is not null and _cdf_v > e)) as _psi_bin"),
     )
     masses = binned.groupBy(*keys, "_psi_bin").agg(
-        F.sum("_w1_wa").alias("_psi_ma"),
-        F.sum("_w1_wb").alias("_psi_mb"),
+        F.sum("_cdf_wa").alias("_psi_ma"),
+        F.sum("_cdf_wb").alias("_psi_mb"),
     )
     # full bin spine: a zero-mass bin still contributes its smoothed
     # term (the sides' smoothed floors differ when n_a != n_b)
@@ -764,25 +667,12 @@ def summary_psi(
           f"(cast(_psi_na as double) + {lap} * {_dlit(bins)}))")
     pb = (f"((cast(_psi_mb as double) + {lap}) / "
           f"(cast(_psi_nb as double) + {lap} * {_dlit(bins)}))")
-    # guarded in-expression like the siblings: an empty side must never
-    # reach the division/log (the result is NULLed anyway)
-    term = F.expr(
-        f"cast(case when _psi_na > 0 and _psi_nb > 0 then "
-        f"round(({pa} - {pb}) * ln({pa} / {pb}), {round_to}) end "
-        f"as decimal(38,{round_to}))")
-    out = full.groupBy(*keys).agg(
-        F.max("_psi_na").alias("n_a"),
-        F.max("_psi_nb").alias("n_b"),
-        F.sum(term).cast("double").alias(out_col),
-    )
-    return out.select(
-        *keys,
-        "n_a", "n_b",
-        F.when(
-            F.col("n_a").isNull() | F.col("n_b").isNull()
-            | (F.col("n_a") == 0) | (F.col("n_b") == 0),
-            F.lit(None).cast("double"),
-        ).otherwise(F.col(out_col)).alias(out_col),
+    na, nb = F.col("_psi_na"), F.col("_psi_nb")
+    term = _both_sides(na, nb, F.expr(f"({pa} - {pb}) * ln({pa} / {pb})"))
+    return full.groupBy(*keys).agg(
+        F.max(na).alias("n_a"),
+        F.max(nb).alias("n_b"),
+        _dsum(term, round_to).alias(out_col),
     )
 
 

@@ -14,6 +14,23 @@ Scale shape (100 TB): one partial-aggregated pass over the scan for any
 number of columns/pairs — no shuffle of the data itself, just the 1-row
 (or |groups|-row) moment table. Pair count grows quadratically in
 ``len(cols)`` but only as *expressions per row*, never as rows.
+
+The drift family (:func:`distribution_shift`, :func:`categorical_shift`,
+:func:`ks_test`, ``aggregates.equi_width_histogram`` and the
+``sketches.summary_*`` distances) is built on one drift core here, each
+rule written once:
+
+- ``_both_sides``: the empty-side guard — a statistic is NULL when
+  either side's total is 0 or absent, and no ratio over an empty total
+  is ever evaluated.
+- ``_equi_width_cell``: the clamped equi-width cell of a value.
+- ``_divergences``: smoothed per-cell shares and the rounded PSI /
+  KL / JS terms over a two-sided cell table, with their DECIMAL fold.
+- ``_cdf_stage``: the tie-collapsed two-sample weighted CDF (raw
+  values are unit-weight points), with the guarded per-point gap.
+
+The summary-side rank cut (``sketches._rank_cut_sql``) lives beside its
+only callers in ``sketches``.
 """
 
 from __future__ import annotations
@@ -21,7 +38,7 @@ from __future__ import annotations
 import math
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["categorical_shift", "chi_square", "chi_square_pvalue",
@@ -32,10 +49,11 @@ __all__ = ["categorical_shift", "chi_square", "chi_square_pvalue",
 _DEC = "decimal(38,9)"
 
 
-def _dsum(c: Column) -> Column:
-    """Order-independent sum: round each term to 9 decimals, accumulate
-    exactly as DECIMAL(38,9), hand back a double scalar."""
-    return F.sum(F.round(c, 9).cast(_DEC)).cast("double")
+def _dsum(c: Column, scale: int = 9) -> Column:
+    """Order-independent sum: round each term to ``scale`` decimals,
+    accumulate exactly as DECIMAL(38,scale), hand back a double
+    scalar."""
+    return F.sum(F.round(c, scale).cast(f"decimal(38,{scale})")).cast("double")
 
 
 def _dsum_sql(c_sql: str) -> str:
@@ -51,6 +69,152 @@ def _dsum_sql(c_sql: str) -> str:
 def _q(name: str) -> str:
     """Backtick-quote an identifier for use inside an expr string."""
     return "`" + name.replace("`", "``") + "`"
+
+
+# --- drift core ---------------------------------------------------------------
+
+
+def _both_sides(na: Column, nb: Column, value: Column) -> Column:
+    """The drift family's empty-side guard: ``value`` when both side
+    totals are positive, else NULL (a total that is 0, or NULL because
+    the side is absent, NULLs the statistic). ``value`` is the CASE
+    branch, so a ratio over either total inside it is never evaluated
+    on an empty side — no division by zero, which an ANSI session
+    raises."""
+    return F.when((na > 0) & (nb > 0), value)
+
+
+def _equi_width_cell(x: Column, mn: Column, mx: Column, k: int) -> Column:
+    """Equi-width cell ``floor((x − mn) / w)`` of ``k`` cells over
+    ``[mn, mx]``, clamped at BOTH ends into ``0..k-1`` (a value outside
+    the range, or a bound rounded past the true extreme, lands in the
+    edge cell); a degenerate range (``mx <= mn``) puts everything in
+    cell 0."""
+    w = (mx - mn) / F.lit(float(k))
+    return F.when(mx <= mn, F.lit(0)).otherwise(
+        F.least(
+            F.lit(k - 1),
+            F.greatest(F.lit(0), F.floor((x - mn) / w).cast("int")),
+        )
+    )
+
+
+def _divergences(
+    cells: DataFrame, label: str, smooth: float, detail: bool
+) -> DataFrame:
+    """PSI, KL(ref‖cur) and Jensen-Shannon over a two-sided cell table
+    ``(label, _nr, _nc)``. Each side's share is smoothed as
+    ``max(n / total, smooth)`` (the standard zero-cell fix) and NULL
+    when either side is empty (:func:`_both_sides`); shares and terms
+    are rounded to 9 and the summary folds them with :func:`_dsum`,
+    final statistics rounded to 6.
+
+    ``detail=True``: one row per cell ``(label, n_ref, n_cur, p_ref,
+    p_cur, psi_term)``; else ONE row ``(n_ref, n_cur, psi, kl_ref_cur,
+    js)``. The side totals ride a window over the bounded cell table
+    (the single partition is safe by construction), so the scans behind
+    the counts run exactly once."""
+    w_all = Window.partitionBy()
+    tot = cells.select(
+        "*",
+        F.sum("_nr").over(w_all).alias("_tr"),
+        F.sum("_nc").over(w_all).alias("_tc"),
+    )
+    tr, tc = F.col("_tr"), F.col("_tc")
+    eps = F.lit(float(smooth))
+    p = _both_sides(tr, tc, F.greatest(
+        F.col("_nr").cast("double") / tr.cast("double"), eps))
+    q = _both_sides(tr, tc, F.greatest(
+        F.col("_nc").cast("double") / tc.cast("double"), eps))
+    m = (p + q) / F.lit(2.0)
+    terms = tot.select(
+        label,
+        F.col("_nr").cast("bigint").alias("n_ref"),
+        F.col("_nc").cast("bigint").alias("n_cur"),
+        F.round(p, 9).alias("p_ref"),
+        F.round(q, 9).alias("p_cur"),
+        F.round((p - q) * F.log(p / q), 9).alias("psi_term"),
+        F.round(p * F.log(p / q), 9).alias("_kl_term"),
+        F.round(
+            F.lit(0.5) * p * F.log(p / m)
+            + F.lit(0.5) * q * F.log(q / m),
+            9,
+        ).alias("_js_term"),
+    )
+    if detail:
+        return terms.select(
+            label, "n_ref", "n_cur", "p_ref", "p_cur", "psi_term"
+        )
+    return terms.agg(
+        F.sum("n_ref").cast("bigint").alias("n_ref"),
+        F.sum("n_cur").cast("bigint").alias("n_cur"),
+        F.round(_dsum(F.col("psi_term")), 6).alias("psi"),
+        F.round(_dsum(F.col("_kl_term")), 6).alias("kl_ref_cur"),
+        F.round(_dsum(F.col("_js_term")), 6).alias("js"),
+    )
+
+
+def _cdf_stage(
+    a: DataFrame,
+    b: DataFrame,
+    value: Column,
+    weight: Column,
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """The two-sample weighted CDF behind :func:`ks_test` and the
+    persisted-summary distances (``sketches.summary_w1_distance``,
+    ``summary_ks_distance``, ``summary_psi``): union the two weighted
+    point sets (``value``/``weight`` evaluated on each side; raw values
+    are unit-weight points, ``weight=F.lit(1)``), collapse tied
+    values, and emit one row per distinct point with both point weights
+    (``_cdf_wa``/``_cdf_wb``), both cumulative weights
+    (``_cdf_ca``/``_cdf_cb``), the next point (``_cdf_next``), both
+    totals (``_cdf_na``/``_cdf_nb``) and the CDF gap
+    ``_cdf_gap = |F_a(v) − F_b(v)|``, NULL when either side is empty
+    (:func:`_both_sides`). With ``keys`` everything is evaluated per
+    key group (both inputs must carry the key columns; a key present on
+    only one side gets a zero total on the other). Both CDFs are ratios
+    of integer weights, so every gap divides the same two integers on
+    any engine and partitioning. One hash aggregate on (keys, value)
+    plus one keys-partitioned window over the collapsed points."""
+    keys = list(keys)
+    v = value.cast("double").alias("_cdf_v")
+    w, zero = weight.cast("bigint"), F.lit(0).cast("bigint")
+    va = a.select(*keys, v, w.alias("_cdf_wa"), zero.alias("_cdf_wb"))
+    vb = b.select(*keys, v, zero.alias("_cdf_wa"), w.alias("_cdf_wb"))
+    # collapse ties FIRST so each point appears once per side mix
+    pts = (
+        va.unionByName(vb)
+        .groupBy(*keys, "_cdf_v")
+        .agg(F.sum("_cdf_wa").alias("_cdf_wa"),
+             F.sum("_cdf_wb").alias("_cdf_wb"))
+    )
+    # window expressions as one-shot parses (_dsum_sql note) — same
+    # frames, same functions
+    part = ("partition by " + ", ".join(map(_q, keys))) if keys else ""
+    cum_frame = (f"over ({part} order by _cdf_v asc rows between "
+                 "unbounded preceding and current row)")
+    lead_over = f"over ({part} order by _cdf_v asc)"
+    cum = pts.select(
+        *keys,
+        "_cdf_v",
+        "_cdf_wa",
+        "_cdf_wb",
+        F.expr(f"sum(_cdf_wa) {cum_frame} as _cdf_ca"),
+        F.expr(f"sum(_cdf_wb) {cum_frame} as _cdf_cb"),
+        F.expr(f"lead(_cdf_v) {lead_over} as _cdf_next"),
+    )
+    full_frame = (f"over ({part} order by _cdf_v asc rows between "
+                  "unbounded preceding and unbounded following)")
+    staged = cum.select(
+        "*",
+        F.expr(f"max(_cdf_ca) {full_frame} as _cdf_na"),
+        F.expr(f"max(_cdf_cb) {full_frame} as _cdf_nb"),
+    )
+    return staged.withColumn("_cdf_gap", _both_sides(
+        F.col("_cdf_na"), F.col("_cdf_nb"),
+        F.expr("abs(cast(_cdf_ca as double) / _cdf_na "
+               "- cast(_cdf_cb as double) / _cdf_nb)")))
 
 
 def correlation_matrix(
@@ -414,8 +578,6 @@ def chi_square(
     the cell table itself the cost). Per-cell terms round to 9 and sum
     as DECIMAL(38,9) for engine determinism.
     """
-    from pyspark.sql import Window
-
     a, b = F.col(col_a), F.col(col_b)
     cells = (
         df.filter(a.isNotNull() & b.isNotNull())
@@ -615,6 +777,9 @@ def distribution_shift(
     terms rounded to 9 before the DECIMAL(38,9) term sum, final
     statistics rounded to 6 — the repo's absorb-the-ulps pattern, so
     the numbers hash-match a SQL oracle computing the same algebra.
+    When either side has no non-NULL value, ``psi``/``kl_ref_cur``/
+    ``js`` (and the detail ``p_ref``/``p_cur``/``psi_term``) are NULL
+    while the counts stay — the ``sketches.summary_*`` contract.
 
     Scale shape (100 TB): the two snapshots are TAGGED and unioned, so
     the reference min/max rides ONE 1-row in-plan broadcast
@@ -632,11 +797,8 @@ def distribution_shift(
         raise ValueError("buckets must be >= 2")
     if not 0.0 < smooth < 1.0:
         raise ValueError("smooth must be in (0, 1)")
-    from pyspark.sql import Window
-
     from .curation import attach_scalars
 
-    k = int(buckets)
     ref = reference.dropna(subset=[value_col])
     cur = current.dropna(subset=[value_col])
     bounds = ref.agg(
@@ -655,66 +817,18 @@ def distribution_shift(
             F.lit(0).alias("_is_ref"),
         )
     )
-    x = F.col("_x")
-    w = (F.col("_mx") - F.col("_mn")) / F.lit(float(k))
-    # degenerate reference (mn == mx) puts everything in bucket 0
-    b = F.when(
-        F.col("_mx") <= F.col("_mn"), F.lit(0)
-    ).otherwise(
-        F.least(
-            F.lit(k - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor((x - F.col("_mn")) / w).cast("int"),
-            ),
-        )
-    )
-    both = (
+    b = _equi_width_cell(
+        F.col("_x"), F.col("_mn"), F.col("_mx"), int(buckets))
+    cells = (
         attach_scalars(tagged, bounds, "_x")
-        .select(b.alias("_b"), F.col("_is_ref"))
-        .groupBy("_b")
+        .select(b.alias("bucket"), F.col("_is_ref"))
+        .groupBy("bucket")
         .agg(
             F.sum("_is_ref").alias("_nr"),
             F.sum(F.lit(1) - F.col("_is_ref")).alias("_nc"),
         )
     )
-    # totals ride a window over the ≤2k-row bucket table (bounded by
-    # construction, so the single partition is safe) — the snapshot
-    # scans behind the counts run exactly once
-    w_all = Window.partitionBy()
-    tr = F.sum("_nr").over(w_all)
-    tc = F.sum("_nc").over(w_all)
-    eps = F.lit(float(smooth))
-    p = F.greatest(F.col("_nr").cast("double") / tr.cast("double"), eps)
-    q = F.greatest(F.col("_nc").cast("double") / tc.cast("double"), eps)
-    m = (p + q) / F.lit(2.0)
-    terms = both.select(
-        F.col("_b").cast("int").alias("bucket"),
-        F.col("_nr").cast("bigint").alias("n_ref"),
-        F.col("_nc").cast("bigint").alias("n_cur"),
-        tr.cast("bigint").alias("_tr"),
-        tc.cast("bigint").alias("_tc"),
-        F.round(p, 9).alias("p_ref"),
-        F.round(q, 9).alias("p_cur"),
-        F.round((p - q) * F.log(p / q), 9).alias("psi_term"),
-        F.round(p * F.log(p / q), 9).alias("_kl_term"),
-        F.round(
-            F.lit(0.5) * p * F.log(p / m)
-            + F.lit(0.5) * q * F.log(q / m),
-            9,
-        ).alias("_js_term"),
-    )
-    if detail:
-        return terms.select(
-            "bucket", "n_ref", "n_cur", "p_ref", "p_cur", "psi_term"
-        )
-    return terms.agg(
-        F.sum("n_ref").cast("bigint").alias("n_ref"),
-        F.sum("n_cur").cast("bigint").alias("n_cur"),
-        F.round(_dsum(F.col("psi_term")), 6).alias("psi"),
-        F.round(_dsum(F.col("_kl_term")), 6).alias("kl_ref_cur"),
-        F.round(_dsum(F.col("_js_term")), 6).alias("js"),
-    )
+    return _divergences(cells, "bucket", smooth, detail)
 
 
 def categorical_shift(
@@ -738,8 +852,9 @@ def categorical_shift(
     categories register as ``__other__`` growth. NULL category counts
     as the literal ``__null__`` cell and ALWAYS keeps its own cell,
     never lumping into ``__other__`` (a source suddenly emitting NULL
-    tags IS drift, and it should say so by name). Same ``max(p, smooth)`` zero-cell smoothing,
-    rounding, and DECIMAL term-sum discipline as the numeric variant.
+    tags IS drift, and it should say so by name). Same
+    ``max(p, smooth)`` zero-cell smoothing, rounding, DECIMAL term-sum
+    discipline and empty-side NULLs as the numeric variant.
 
     ``detail=False``: ONE row ``(n_ref, n_cur, psi, kl_ref_cur, js)``;
     ``detail=True``: per-category ``(category, n_ref, n_cur, p_ref,
@@ -755,8 +870,6 @@ def categorical_shift(
         raise ValueError("top_k must be >= 1")
     if not 0.0 < smooth < 1.0:
         raise ValueError("smooth must be in (0, 1)")
-    from pyspark.sql import Window
-
     k = int(top_k)
     cat = F.coalesce(F.col(value_col).cast("string"), F.lit("__null__"))
 
@@ -799,46 +912,15 @@ def categorical_shift(
             .agg(F.sum(n_name).alias(n_name))
         )
 
-    both = (
+    cells = (
         lumped(rc, "_nr").join(lumped(cc, "_nc"), "_c", "full")
         .select(
-            F.col("_c"),
+            F.col("_c").alias("category"),
             F.coalesce("_nr", F.lit(0)).alias("_nr"),
             F.coalesce("_nc", F.lit(0)).alias("_nc"),
         )
     )
-    w_all = Window.partitionBy()
-    tr = F.sum("_nr").over(w_all)
-    tc = F.sum("_nc").over(w_all)
-    eps = F.lit(float(smooth))
-    p = F.greatest(F.col("_nr").cast("double") / tr.cast("double"), eps)
-    q = F.greatest(F.col("_nc").cast("double") / tc.cast("double"), eps)
-    m = (p + q) / F.lit(2.0)
-    terms = both.select(
-        F.col("_c").alias("category"),
-        F.col("_nr").cast("bigint").alias("n_ref"),
-        F.col("_nc").cast("bigint").alias("n_cur"),
-        F.round(p, 9).alias("p_ref"),
-        F.round(q, 9).alias("p_cur"),
-        F.round((p - q) * F.log(p / q), 9).alias("psi_term"),
-        F.round(p * F.log(p / q), 9).alias("_kl_term"),
-        F.round(
-            F.lit(0.5) * p * F.log(p / m)
-            + F.lit(0.5) * q * F.log(q / m),
-            9,
-        ).alias("_js_term"),
-    )
-    if detail:
-        return terms.select(
-            "category", "n_ref", "n_cur", "p_ref", "p_cur", "psi_term"
-        )
-    return terms.agg(
-        F.sum("n_ref").cast("bigint").alias("n_ref"),
-        F.sum("n_cur").cast("bigint").alias("n_cur"),
-        F.round(_dsum(F.col("psi_term")), 6).alias("psi"),
-        F.round(_dsum(F.col("_kl_term")), 6).alias("kl_ref_cur"),
-        F.round(_dsum(F.col("_js_term")), 6).alias("js"),
-    )
+    return _divergences(cells, "category", smooth, detail)
 
 
 # --- driver-side p-value helpers --------------------------------------------
@@ -995,8 +1077,10 @@ def ks_test(
     integers on any engine and any partitioning; ``ks_d``/``ks_stat``
     round to ``round_to`` only to absorb the final float ops.
 
-    Scale shape (100 TB): snapshots are tagged and unioned (each side
-    scanned once, column-pruned to ``by`` + ``value_col``); one
+    Scale shape (100 TB): each raw value is a unit-weight point of the
+    shared two-sample CDF stage (``_cdf_stage``, the one behind the
+    ``sketches.summary_*`` distances), so the snapshots are unioned
+    (each side scanned once, column-pruned to ``by`` + ``value_col``); one
     (group, value) pre-aggregation shuffle collapses ties, one group
     shuffle orders the ≤ |distinct values| rows per group for the
     running ECDFs — the final max reuses that partitioning. Per-group
@@ -1006,50 +1090,28 @@ def ks_test(
     :func:`distribution_shift` — per-value exactness is the point of
     this operator, bounded cells are the point of that one.
     """
-    from pyspark.sql import Window
-
     by = list(by)
     group = by or ["_g"]
-    val = F.col(value_col).cast("double")
 
-    def side(df: DataFrame, tag: int) -> DataFrame:
-        out = df.dropna(subset=[value_col]).select(
-            *by, val.alias("_v"), F.lit(tag).alias("_src")
-        )
+    def side(df: DataFrame) -> DataFrame:
+        out = df.dropna(subset=[value_col])
         return out if by else out.withColumn("_g", F.lit(0))
 
-    tagged = side(reference, 0).unionByName(side(current, 1))
-    per_val = tagged.groupBy(*group, "_v").agg(
-        F.count(F.when(F.col("_src") == 0, 1)).alias("_nr"),
-        F.count(F.when(F.col("_src") == 1, 1)).alias("_nc"),
-    )
-    w_ord = (
-        Window.partitionBy(*group)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy(*group)
-    n_r = F.sum("_nr").over(w_all)
-    n_c = F.sum("_nc").over(w_all)
-    gap = F.abs(
-        F.sum("_nr").over(w_ord).cast("double") / n_r.cast("double")
-        - F.sum("_nc").over(w_ord).cast("double") / n_c.cast("double")
-    )
-    staged = per_val.select(
-        *group, gap.alias("_gap"),
-        n_r.alias("_n_ref"), n_c.alias("_n_cur"),
-    ).filter((F.col("_n_ref") > 0) & (F.col("_n_cur") > 0))
-    d = F.max("_gap")
+    # groups missing a side have a NULL gap on every point
+    staged = _cdf_stage(
+        side(reference), side(current), F.col(value_col), F.lit(1), group
+    ).filter(F.col("_cdf_gap").isNotNull())
+    d = F.max("_cdf_gap")
     en = F.sqrt(
-        F.max("_n_ref").cast("double") * F.max("_n_cur").cast("double")
-        / (F.max("_n_ref").cast("double")
-           + F.max("_n_cur").cast("double"))
+        F.max("_cdf_na").cast("double") * F.max("_cdf_nb").cast("double")
+        / (F.max("_cdf_na").cast("double")
+           + F.max("_cdf_nb").cast("double"))
     )
     return (
         staged.groupBy(*group)
         .agg(
-            F.max("_n_ref").cast("bigint").alias("n_ref"),
-            F.max("_n_cur").cast("bigint").alias("n_cur"),
+            F.max("_cdf_na").cast("bigint").alias("n_ref"),
+            F.max("_cdf_nb").cast("bigint").alias("n_cur"),
             F.round(d, round_to).alias("ks_d"),
             F.round(en * d, round_to).alias("ks_stat"),
         )
