@@ -951,8 +951,8 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a 4-term query, Okapi weighting with the Lucene 1+ idf.
     Doc-count/avgdl ride a 1-row in-plan attach onto the ≤4-row df
     table, which broadcasts onto the term-filtered match stream;
-    DECIMAL(20,9) per-term sums make the scores engine-stable; the
-    cut is TakeOrderedAndProject."""
+    exact DECIMAL per-term sums (stats._dsum) make the scores
+    engine-stable; the cut is TakeOrderedAndProject."""
     from yaetl_spark.operators import bm25_topk
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")

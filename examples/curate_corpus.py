@@ -167,7 +167,8 @@ def main(spark, sf_dir: str = "/root/testdata/sf0.001"):
     )
 
     # 3) duplicated-span removal: cut every corpus-repeated 12-token run
-    #    (broadcast hot-set tag + per-doc island merge; see PLANS.md)
+    #    (broadcast hot-set tag + per-doc island merge; see the
+    #    duplicate_spans docstring)
     despanned = strip_duplicate_spans(
         deduped_lines.select("doc_id", "text"), k=12, min_occurrences=2,
     ).drop("n_tokens", "n_removed").join(

@@ -43,3 +43,15 @@ def sf_dir() -> str:
 
 def table_path(name: str) -> str:
     return f"{SF_DIR}/{name}.parquet"
+
+
+@pytest.fixture
+def ansi(spark, request):
+    """Run the test with ``spark.sql.ansi.enabled`` set to the param,
+    restoring the session's value afterwards."""
+    prior = spark.conf.get("spark.sql.ansi.enabled", "false")
+    spark.conf.set("spark.sql.ansi.enabled", request.param)
+    try:
+        yield request.param
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)

@@ -3,6 +3,9 @@ plumbing, JDBC upsert SQL."""
 
 from __future__ import annotations
 
+import math
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -374,6 +377,106 @@ def test_repetition_ratio(spark):
     assert got[1] == 0.75
     assert got[2] == 0.0
     assert got[3] == 0.0
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"], indirect=True)
+def test_null_text_token_counts_are_session_independent(spark, ansi):
+    """A NULL text has no token count in either session (``size(NULL)``
+    is -1 with ANSI off): bm25_topk's avgdl skips it, as the oracle's
+    ``SUM(len(t))`` does, and bpe_token_count / repetition_ratio give
+    NULL, while an empty text counts 0 tokens."""
+    from yaetl_spark.operators import (bm25_topk, bpe_token_count,
+                                       repetition_ratio)
+
+    docs = spark.createDataFrame(
+        [(1, "apple banana apple"), (2, "banana cherry"), (3, None), (4, "")],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"]: r["bm25"]
+           for r in bm25_topk(docs, ["apple"]).collect()}
+    # N = 4 documents, avgdl = (3 + 2 + 0) / 4
+    idf = math.log(1 + (4 - 1 + 0.5) / (1 + 0.5))
+    tf_part = 2 * 2.2 / (2 + 1.2 * (1 - 0.75 + 0.75 * 3 / 1.25))
+    assert got == {1: round(idf * tf_part, 6)}
+    counts = {
+        r["doc_id"]: (r["n"], r["rep"])
+        for r in docs.select(
+            "doc_id",
+            bpe_token_count(F.col("text")).alias("n"),
+            repetition_ratio(F.col("text"), 3).alias("rep"),
+        ).collect()
+    }
+    assert counts[3] == (None, None)
+    assert counts[4] == (0, 0.0)
+
+
+# texts of 0, 1, 2, 3 and 5 tokens, and one shorter than every char n
+_CORE_TEXTS = {1: "", 2: "alpha", 3: "alpha beta", 4: "alpha beta alpha",
+               5: "to be or to be", 6: "abc"}
+
+
+def _py_windows(items, k):
+    return [items[i:i + k] for i in range(len(items) - k + 1)]
+
+
+def _py_tokens(text):
+    return [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 5])
+def test_text_windows_match_python(spark, k):
+    """Every n-gram window of the text family against pure Python:
+    repetition_ratio, word and char shingles, char_ngrams, the bigram
+    counts of ngram_perplexity / dsir_score and duplicate_spans'
+    windows over a corpus where every window is duplicated."""
+    from yaetl_spark.operators import (char_ngrams, dsir_score,
+                                       duplicate_spans, ngram_perplexity,
+                                       repetition_ratio)
+    from yaetl_spark.operators.dedup import shingles
+
+    docs = spark.createDataFrame(
+        sorted(_CORE_TEXTS.items()), "doc_id long, text string")
+    t, n_char = F.col("text"), k + 3
+    got = {
+        r["doc_id"]: r
+        for r in docs.select(
+            "doc_id",
+            repetition_ratio(t, k).alias("rep"),
+            shingles(t, "word", k).alias("word"),
+            shingles(t, "char", n_char).alias("char"),
+            char_ngrams(t, n_char).alias("grams"),
+        ).collect()
+    }
+    for i, text in _CORE_TEXTS.items():
+        toks = _py_tokens(text)
+        grams = [" ".join(w) for w in _py_windows(toks, k)]
+        rep = round(1 - len(set(grams)) / len(grams), 6) if grams else 0.0
+        word = [" ".join(toks)] if len(toks) < k else grams
+        chars = _py_windows(" ".join(text.split()).lower(), n_char)
+        assert got[i]["rep"] == rep, text
+        assert got[i]["word"] == list(dict.fromkeys(word)), text
+        assert got[i]["grams"] == chars, text
+        assert got[i]["char"] == list(dict.fromkeys(chars)), text
+
+    n_toks = {i: len(_py_tokens(x)) for i, x in _CORE_TEXTS.items()}
+    ppl = {r["doc_id"]: r["n_bigrams"]
+           for r in ngram_perplexity(docs).collect()}
+    assert ppl == {i: n - 1 for i, n in n_toks.items() if n >= 2}
+    dsir = {r["doc_id"]: r["n_feats"] for r in dsir_score(docs, docs).collect()}
+    assert dsir == {i: 2 * n - 1 for i, n in n_toks.items() if n >= 1}
+
+    twice = docs.unionByName(docs.withColumn("doc_id", F.col("doc_id") + 100))
+    spans = {
+        (r["doc_id"], r["span_start"], r["span_end"], r["span_tokens"],
+         r["n_shingles"])
+        for r in duplicate_spans(twice, k=k, min_occurrences=2).collect()
+    }
+    want = set()
+    for i, text in _CORE_TEXTS.items():
+        n = len(text.split(" "))
+        if n >= k:
+            want |= {(i + c, 1, n, n, n - k + 1) for c in (0, 100)}
+    assert spans == want
 
 
 def test_redact_pii(spark):

@@ -297,6 +297,11 @@ def test_hash_heavy_queries_survive_ansi_mode(spark):
         "distribution_shift", "categorical_shift", "equi_width",
         "summary_w1_distance", "summary_ks_distance", "summary_psi",
         "summary_psi_by_source", "stream_psi",
+        # the text core: token counts, n-gram windows, scalar attaches
+        # and exact DECIMAL term sums of the text family
+        "tfidf", "bm25_topk", "token_pmi", "repetition", "lang_id",
+        "text_stats", "inverted_index", "normalized_dedup",
+        "ngram_novelty", "fuzzy_match",
     ]
     queries = entry_mod.queries()
     _prior_ansi = spark.conf.get("spark.sql.ansi.enabled", "false")

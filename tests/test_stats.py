@@ -426,18 +426,6 @@ def test_categorical_shift_lumping_null_and_novel(spark):
         categorical_shift(ref, ref, "v", top_k=0)
 
 
-@pytest.fixture
-def ansi(spark, request):
-    """Run the test with ``spark.sql.ansi.enabled`` set to the param,
-    restoring the session's value afterwards."""
-    prior = spark.conf.get("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.ansi.enabled", request.param)
-    try:
-        yield request.param
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prior)
-
-
 @pytest.mark.parametrize("ansi", ["false", "true"], indirect=True)
 @pytest.mark.parametrize("empty_side", ["ref", "cur"])
 @pytest.mark.parametrize("op", ["distribution_shift", "categorical_shift"])

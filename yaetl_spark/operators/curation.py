@@ -21,6 +21,11 @@ published curation recipes (CCNet, Gopher, RefinedWeb) made standard:
 Everything is pure Column expressions + relational ops (JVM-side,
 whole-stage codegen; no Python UDFs), built only from primitives with
 identical semantics in DuckDB so every operator is oracle-checkable.
+The tokenize / n-gram / count / score rules come from the text core in
+:mod:`~yaetl_spark.operators.text` (one n-gram window, one padded
+marker frame, NULL-safe ``array_size`` token counts); one-row scalars
+attach with :func:`attach_scalars`, and rounded log terms fold with the
+exact DECIMAL sum :func:`~yaetl_spark.operators.stats._dsum`.
 """
 
 from __future__ import annotations
@@ -32,7 +37,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .sampling import hash_bucket, hash_bucket_str
-from .text import LANG_MARKERS, normalize_ws, punct_ratio, token_count
+from .stats import _dsum
+from .text import (LANG_MARKERS, _padded, _window_starts, let_once,
+                   normalize_ws, punct_ratio, token_count, tokenize)
 
 __all__ = [
     "attach_scalars",
@@ -234,7 +241,7 @@ def duplicate_spans(
     """
     from pyspark.sql.window import Window
 
-    from .text import fingerprint128, let_once
+    from .text import fingerprint128
 
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -246,10 +253,7 @@ def duplicate_spans(
     # for the per-position slice — let_once binds it so the two hash
     # halves fold one slice, not two
     toks = F.col("_toks")
-    n = F.size(toks)
-    positions = F.when(
-        n >= k, F.sequence(F.lit(1), n - F.lit(k - 1))
-    ).otherwise(F.array().cast("array<int>"))
+    positions = _window_starts(F.array_size(toks), k)
     shingled = df.select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("_toks")
     ).select(
@@ -334,8 +338,6 @@ def strip_duplicate_spans(
     the id-keyed span join (planner-broadcastable when the span set is
     small).
     """
-    from .text import let_once
-
     if spans is None:
         spans = duplicate_spans(
             df, text_col=text_col, id_col=id_col, k=k,
@@ -504,10 +506,10 @@ def ngram_perplexity(
     Returns ``(id_col, ppl, n_bigrams)``.
 
     Determinism contract: each ln-term is rounded to 9 decimals and
-    summed as DECIMAL(20,9) — an EXACT, order-independent sum — so the
-    result is bit-stable across partitionings and engines (the same
-    absorb-the-ulps pattern as the k-means oracle); only then does the
-    single exp/divide run in float.
+    summed as DECIMAL (:func:`~yaetl_spark.operators.stats._dsum`) — an
+    EXACT, order-independent sum — so the result is bit-stable across
+    partitionings and engines (the same absorb-the-ulps pattern as the
+    k-means oracle); only then does the single exp/divide run in float.
 
     Scale shape (100 TB):
     - the bigram stream is a narrow array transform + explode (token
@@ -517,10 +519,10 @@ def ngram_perplexity(
     - scoring joins the stream against the two count tables on
       (prev, cur) / prev — vocabulary-keyed shuffles, broadcastable when
       the model is small;
-    - V rides in as a ONE-ROW broadcast hash join on a constant key
-      (attached to the vocabulary-sized ``prev``-count table, never the
-      bigram stream), so the whole operator is a single lazy job — no
-      eager driver action at call time.
+    - V rides in as a ONE-ROW broadcast (:func:`attach_scalars`, onto
+      the vocabulary-sized ``prev``-count table, never the bigram
+      stream), so the whole operator is a single lazy job — no eager
+      driver action at call time.
 
     Recompute caveat: the tokenize→bigram lineage feeds the bigram-count
     branch, the prev-count branch, the vocabulary count, AND the scoring
@@ -537,8 +539,6 @@ def ngram_perplexity(
     consumed, or the MEMORY_AND_DISK blocks live for the session (the
     operator cannot know when the lazily-evaluated result is done).
     """
-    from .text import let_once, tokenize
-
     if alpha <= 0:
         raise ValueError("alpha must be > 0 (unsmoothed zeros break ln)")
     toks_df = df.select(
@@ -546,17 +546,13 @@ def ngram_perplexity(
     )
 
     def to_bigrams(t: Column) -> Column:
-        n = F.size(t)
-        return F.when(
-            n >= 2,
-            F.transform(
-                F.sequence(F.lit(2), n),
-                lambda i: F.struct(
-                    F.element_at(t, i - 1).alias("prev"),
-                    F.element_at(t, i).alias("cur"),
-                ),
+        return F.transform(
+            _window_starts(F.array_size(t), 2),
+            lambda i: F.struct(
+                F.element_at(t, i).alias("prev"),
+                F.element_at(t, i + 1).alias("cur"),
             ),
-        ).otherwise(F.array().cast("array<struct<prev:string,cur:string>>"))
+        )
 
     bigrams = toks_df.select(
         F.col(id_col),
@@ -567,21 +563,8 @@ def ngram_perplexity(
         from pyspark import StorageLevel
 
         bigrams = bigrams.persist(StorageLevel.MEMORY_AND_DISK)
-    # V as a 1-row relation: broadcast-hash-joined (constant key) onto
-    # the VOCABULARY-sized prev-count table — 1 row vs |V| rows, never
-    # touching the bigram stream. The key is an always-0 expression
-    # DERIVED from a real column on each side: a literal key would be
-    # constant-folded into `1 = 1` → join condition true → Catalyst
-    # plans BroadcastNestedLoopJoin (and trips assert_scales); a
-    # non-foldable pmod(·, 1) keeps it an equi BroadcastHashJoin.
-    vocab_df = (
-        toks_df.select(F.explode("_t").alias("_tok"))
-        .agg(F.countDistinct("_tok").alias("_vc"))
-        .select(
-            F.col("_vc").cast("double").alias("_v"),
-            F.pmod(F.col("_vc").cast("int"), F.lit(1)).alias("_one"),
-        )
-    )
+    vocab_df = toks_df.select(F.explode("_t").alias("_tok")).agg(
+        F.countDistinct("_tok").cast("double").alias("_v"))
     # NOT pinned with compute_once: the model's count shuffle sits below
     # any pin point, and localCheckpoint on a shuffle-bearing plan
     # materializes its stages at call time under AQE — breaking this
@@ -590,21 +573,12 @@ def ngram_perplexity(
     # identical count shuffles at runtime.
     cbg = bigrams.groupBy("prev", "cur").agg(
         F.count(F.lit(1)).alias("_c"))
-    cpv = (
-        cbg.groupBy("prev").agg(F.sum("_c").alias("_cp"))
-        .withColumn(
-            "_one", F.pmod(F.coalesce(F.length("prev"), F.lit(0)), F.lit(1))
-        )
-        .join(F.broadcast(vocab_df), "_one")
-        .drop("_one")
+    cpv = attach_scalars(
+        cbg.groupBy("prev").agg(F.sum("_c").alias("_cp")), vocab_df, "prev")
+    lp = F.log(
+        (F.col("_c") + F.lit(float(alpha)))
+        / (F.col("_cp") + F.lit(float(alpha)) * F.col("_v"))
     )
-    lp = F.round(
-        F.log(
-            (F.col("_c") + F.lit(float(alpha)))
-            / (F.col("_cp") + F.lit(float(alpha)) * F.col("_v"))
-        ),
-        9,
-    ).cast("decimal(20,9)")
     scored = (
         bigrams.join(cbg, ["prev", "cur"])
         .join(cpv, "prev")
@@ -612,9 +586,7 @@ def ngram_perplexity(
     )
     out = scored.groupBy(id_col).agg(
         F.round(
-            F.exp(
-                -(F.sum("_lp").cast("double") / F.count(F.lit(1)))
-            ),
+            F.exp(-(_dsum(F.col("_lp")) / F.count(F.lit(1)))),
             6,
         ).alias("ppl"),
         F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
@@ -701,7 +673,7 @@ def gopher_quality_flags(
     mean_wl = F.when(n_tok == 0, F.lit(0.0)).otherwise(
         n_word_chars.cast("double") / n_tok.cast("double")
     )
-    padded = F.concat(F.lit(" "), F.lower(t), F.lit(" "))
+    padded = _padded(t)
     kinds: Column = F.lit(0)
     for m in LANG_MARKERS["en"]:
         kinds = kinds + F.when(padded.contains(m), F.lit(1)).otherwise(F.lit(0))
@@ -1059,8 +1031,9 @@ def dsir_score(
     tokens have no features and drop.
 
     Determinism contract: features hash via md5 (engine-portable), each
-    log term is rounded to 9 decimals and summed as DECIMAL(20,9) — an
-    exact, order-independent sum — so scores are bit-stable across
+    log term is rounded to 9 decimals and summed as DECIMAL
+    (:func:`~yaetl_spark.operators.stats._dsum`) — an exact,
+    order-independent sum — so scores are bit-stable across
     partitionings and engines; the final round(·, 6) happens after the
     exact sum.
 
@@ -1076,8 +1049,6 @@ def dsir_score(
     - scoring broadcasts the ≤ ``buckets``-row log-ratio table against
       the raw feature stream, then one id-keyed aggregation.
     """
-    from .text import tokenize
-
     if alpha <= 0:
         raise ValueError("alpha must be > 0 (unsmoothed zeros break log)")
     if buckets < 2:
@@ -1087,26 +1058,15 @@ def dsir_score(
         toks = frame.select(
             F.col(id_col), tokenize(F.col(text_col)).alias("_t")
         )
+        t = F.col("_t")
+        bigrams = F.transform(
+            _window_starts(F.array_size(t), 2),
+            lambda i: F.concat(
+                F.element_at(t, i), F.lit(" "), F.element_at(t, i + 1)),
+        )
         grams = toks.select(
             F.col(id_col),
-            F.explode(
-                F.concat(
-                    F.col("_t"),
-                    F.when(
-                        F.size("_t") >= 2,
-                        F.transform(
-                            F.sequence(F.lit(2), F.size("_t")),
-                            lambda i: F.concat(
-                                F.element_at(F.col("_t"), i - 1),
-                                F.lit(" "),
-                                F.element_at(F.col("_t"), i),
-                            ),
-                        ),
-                    ).otherwise(F.array().cast("array<string>")),
-                )
-                if use_bigrams
-                else F.col("_t")
-            ).alias("_g"),
+            F.explode(F.concat(t, bigrams) if use_bigrams else t).alias("_g"),
         )
         return grams.select(
             F.col(id_col), hash_bucket_str(F.col("_g"), buckets).alias("_b")
@@ -1142,17 +1102,16 @@ def dsir_score(
     ).withColumn("_tr", F.sum("_cr").over(w_all).cast("double"))
     a = F.lit(float(alpha))
     ak = F.lit(float(alpha) * buckets)
-    lr = F.round(
+    lr = (
         F.log((F.col("_ct") + a) / (F.col("_tt") + ak))
-        - F.log((F.col("_cr") + a) / (F.col("_tr") + ak)),
-        9,
-    ).cast("decimal(20,9)")
+        - F.log((F.col("_cr") + a) / (F.col("_tr") + ak))
+    )
     ratios = model.select("_b", lr.alias("_lr"))
     return (
         raw_feats.join(F.broadcast(ratios), "_b")
         .groupBy(id_col)
         .agg(
-            F.round(F.sum("_lr").cast("double"), 6).alias("dsir_logratio"),
+            F.round(_dsum(F.col("_lr")), 6).alias("dsir_logratio"),
             F.count(F.lit(1)).cast("bigint").alias("n_feats"),
         )
     )

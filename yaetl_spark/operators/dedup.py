@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import _MERSENNE31, TOKEN_SPLIT, char_ngrams, rolling_hash_raw
+from .text import (_MERSENNE31, TOKEN_SPLIT, _window_starts, char_ngrams,
+                   let_once, rolling_hash_raw, tokenize)
 
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -81,14 +82,15 @@ def shingles(
     ``char`` n-grams (finer granularity for short texts)."""
     if mode == "char":
         return F.array_distinct(char_ngrams(text, size))
-    from .text import let_once, tokenize
 
     def grams(toks: Column) -> Column:
+        # size, not array_size: a NULL text's shingles are [''] with
+        # ANSI off and NULL with it on, as the MinHash oracles pin them
         n = F.size(toks)
         return F.array_distinct(
             F.when(n < size, F.array(F.concat_ws(" ", toks))).otherwise(
                 F.transform(
-                    F.sequence(F.lit(1), n - F.lit(size - 1)),
+                    _window_starts(n, size),
                     lambda i: F.concat_ws(" ", F.slice(toks, i, size)),
                 )
             )
@@ -673,7 +675,7 @@ def ngram_jaccard_pairs(
     """
     grams = df.select(
         F.col(id_col).alias("_id"),
-        F.array_distinct(char_ngrams(F.col(text_col), shingle_size)).alias("_g"),
+        shingles(F.col(text_col), "char", shingle_size).alias("_g"),
     )
     if candidates is None:
         if not all_pairs:

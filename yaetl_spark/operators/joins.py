@@ -403,7 +403,7 @@ def fuzzy_join(
     """
     from pyspark.sql import Window
 
-    from .text import char_ngrams
+    from .dedup import shingles
 
     if keep not in ("best", "all"):
         raise ValueError("keep must be 'best' or 'all'")
@@ -418,7 +418,7 @@ def fuzzy_join(
     def gram_sets(df: DataFrame, col: str, id_: str) -> DataFrame:
         return df.select(
             F.col(id_),
-            F.array_distinct(char_ngrams(F.col(col), ngram)).alias("_gs"),
+            shingles(F.col(col), "char", ngram).alias("_gs"),
         ).filter(F.size("_gs") > 0)
 
     def explode_stream(sets: DataFrame, id_: str, size_name: str,

@@ -8,12 +8,26 @@ Everything here is pure Column expressions (JVM-side, whole-stage
 codegen) — no Python UDFs in the hot path. Formulas deliberately use only
 primitives with identical semantics in DuckDB (length/replace/lower/md5/
 regexp) so every operator is oracle-checkable.
+
+The text and curation operators share one text core, each rule written
+once: one ``(id, token)`` stream (:func:`_token_stream`), one n-gram
+window (:func:`_window_starts`), one padded marker count
+(:func:`_marker_hits`), one BPE symbol init (:func:`_bpe_symbols`) and
+one BPE merge fold (:func:`_bpe_fold_rules`); one-row scalars attach
+with :func:`~yaetl_spark.operators.curation.attach_scalars` and rounded
+terms fold with the exact DECIMAL sum
+:func:`~yaetl_spark.operators.stats._dsum`. Token counts are
+``array_size``, NULL for a NULL text in every session (``size(NULL)``
+is -1 when ANSI is off); ``dedup.shingles`` alone keeps ``size``,
+because the MinHash oracles pin its NULL-text output per session.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .stats import _dsum
 
 # Tiny deterministic stopword sets per language for the n-gram/stopword
 # language-ID heuristic. Chosen to be unambiguous across the set.
@@ -45,6 +59,42 @@ def let_once(bound: Column, body) -> Column:
     results). Works for any element type, including arrays.
     """
     return F.get(F.transform(F.array(bound), body), 0)
+
+
+def _window_starts(n: Column, k: int) -> Column:
+    """1-based start of every length-``k`` window over ``n`` items (a
+    token or character count) — the one n-gram window rule; callers
+    ``transform`` over it. Empty when ``n < k``; NULL when ``n`` is
+    NULL, so a NULL text keeps NULL windows rather than none."""
+    return F.when(n < k, F.array().cast("array<int>")).otherwise(
+        F.sequence(F.lit(1), n - F.lit(k - 1))
+    )
+
+
+def _token_stream(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(id_col, token)``: one row per :func:`tokenize` token of every
+    document — the front end of the corpus-statistics operators."""
+    return df.select(
+        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("token")
+    )
+
+
+def _padded(text: Column) -> Column:
+    """Lowercased text between two spaces, so the space-padded
+    :data:`LANG_MARKERS` also match at the text's ends."""
+    return F.concat(F.lit(" "), F.lower(text), F.lit(" "))
+
+
+def _marker_hits(text: Column, markers: list[str]) -> Column:
+    """Occurrences of the padded ``markers`` in :func:`_padded` text,
+    by exact length arithmetic."""
+    padded = _padded(text)
+    hits: Column = F.lit(0)
+    for m in markers:
+        hits = hits + (
+            F.length(padded) - F.length(F.replace(padded, F.lit(m), F.lit("")))
+        ) / F.lit(len(m))
+    return hits
 
 
 def fingerprint128(value: Column) -> Column:
@@ -118,14 +168,7 @@ def punct_ratio(text: Column) -> Column:
 
 def stopword_ratio(text: Column, markers: list[str] | None = None) -> Column:
     """Fraction of tokens that are common-English stopwords (padded-match)."""
-    markers = markers or LANG_MARKERS["en"]
-    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    hits: Column = F.lit(0)
-    for m in markers:
-        occurrences = (
-            F.length(padded) - F.length(F.replace(padded, F.lit(m), F.lit("")))
-        ) / F.lit(len(m))
-        hits = hits + occurrences
+    hits = _marker_hits(text, markers or LANG_MARKERS["en"])
     return F.when(token_count(text) == 0, F.lit(0.0)).otherwise(
         hits.cast("double") / token_count(text).cast("double")
     )
@@ -178,20 +221,16 @@ def repetition_ratio(text: Column, ngram: int = 3) -> Column:
     """Within-document duplicate-``ngram`` fraction — the Gopher-style
     repetition quality signal (boilerplate / generated-text detector):
     ``1 − distinct_ngrams / total_ngrams``, 0.0 for docs shorter than the
-    window. Pure map-side expression, exact integer counts both engines."""
+    window, NULL for NULL text. Pure map-side expression, exact integer
+    counts both engines."""
     def over_tokens(toks: Column) -> Column:
-        n = F.size(toks)
-        grams_expr = F.when(
-            n < ngram, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), n - F.lit(ngram - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, ngram)),
-            )
+        grams_expr = F.transform(
+            _window_starts(F.array_size(toks), ngram),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, ngram)),
         )
 
         def over_grams(grams: Column) -> Column:
-            total = F.size(grams)
+            total = F.array_size(grams)
             return F.when(total <= 0, F.lit(0.0)).otherwise(
                 F.round(
                     F.lit(1.0)
@@ -212,16 +251,8 @@ def lang_id(text: Column, markers: dict[str, list[str]] | None = None) -> Column
     """Heuristic language ID: the language with the most marker-stopword
     hits; 'und' (undetermined) when no marker fires."""
     markers = markers or LANG_MARKERS
-    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    scores = []
-    for lang, words in markers.items():
-        hits: Column = F.lit(0)
-        for m in words:
-            occ = (
-                F.length(padded) - F.length(F.replace(padded, F.lit(m), F.lit("")))
-            ) / F.lit(len(m))
-            hits = hits + occ
-        scores.append((lang, hits))
+    scores = [(lang, _marker_hits(text, words))
+              for lang, words in markers.items()]
     # argmax with deterministic tie-break on language code order
     best_lang: Column = F.lit("und")
     best_score: Column = F.lit(0)
@@ -294,8 +325,9 @@ def rolling_fingerprint(
 
 def bpe_token_count(text: Column, pattern: str = TOKEN_SPLIT) -> Column:
     """Token count under the BPE-ish regex tokenizer (:func:`tokenize`) —
-    the subword-friendly companion to whitespace :func:`token_count`."""
-    return F.size(tokenize(text, pattern))
+    the subword-friendly companion to whitespace :func:`token_count`
+    (NULL for NULL text)."""
+    return F.array_size(tokenize(text, pattern))
 
 
 def tokenize(text: Column, pattern: str = TOKEN_SPLIT) -> Column:
@@ -377,22 +409,13 @@ def token_count_estimate(
     )
 
 
-def _bpe_merge_pair(syms: Column, left: str, right: str) -> Column:
-    """Apply ONE BPE merge rule to a symbol array: leftmost-first,
-    non-overlapping (the Sennrich scan order) as a single fold —
-    replace-last is safe because within one pass the merged symbol
-    ``left+right`` can never equal ``left`` (``right`` is non-empty),
-    so a freshly-merged symbol can never chain-trigger the same rule."""
-    merged = F.array(F.lit(left + right))
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, F.lit(-1)) == F.lit(left))
-            & (s == F.lit(right)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), merged),
-        ).otherwise(F.concat(acc, F.array(s))),
+def _bpe_symbols(word: Column, end_of_word: str) -> Column:
+    """A word's starting BPE symbols: its characters, the last one
+    carrying ``end_of_word``."""
+    chars = F.split(word, "")
+    return F.concat(
+        F.slice(chars, 1, F.size(chars) - 1),
+        F.array(F.concat(F.element_at(chars, F.lit(-1)), F.lit(end_of_word))),
     )
 
 
@@ -410,13 +433,17 @@ def _bpe_rules_lit(rules) -> Column:
 
 def _bpe_fold_rules(syms: Column, rules: Column) -> Column:
     """Apply an ORDERED array of merge rules (``array<struct<l,r>>``)
-    to a symbol array in ONE depth-2 expression: outer fold over the
-    rules, inner fold arithmetic-identical to :func:`_bpe_merge_pair`
-    with the rule's fields in place of the literals (equality pinned by
+    to a symbol array in ONE depth-2 expression — the one BPE merge
+    fold of training and application (parity pinned by
     tests/test_operators.py::test_bpe_apply_matches_train_vocab). The
-    depth stays 2 whatever ``len(rules)`` is — chaining
-    :func:`_bpe_merge_pair` N times would nest N aggregates and blow
-    past codegen limits at real merge counts."""
+    outer fold runs over the rules; the inner fold applies one rule
+    leftmost-first, non-overlapping (the Sennrich scan order), and
+    replace-last is safe because within one pass the merged symbol
+    ``l+r`` can never equal ``l`` (``r`` is non-empty), so a
+    freshly-merged symbol can never chain-trigger the same rule. The
+    depth stays 2 whatever ``len(rules)`` is — one aggregate per rule
+    would nest N deep and blow past codegen limits at real merge
+    counts."""
     return F.aggregate(
         rules,
         syms,
@@ -527,15 +554,8 @@ def bpe_train(
         .groupBy("_w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
     )
-    chars = F.split(F.col("_w"), "")
     vocab = words.select(
-        "_w",
-        "_n",
-        F.concat(
-            F.slice(chars, 1, F.size(chars) - 1),
-            F.array(F.concat(F.element_at(chars, F.lit(-1)),
-                             F.lit(end_of_word))),
-        ).alias("_syms"),
+        "_w", "_n", _bpe_symbols(F.col("_w"), end_of_word).alias("_syms"),
     ).localCheckpoint(eager=False)
     trainable = vocab if min_count == 1 else vocab.filter(
         F.col("_n") >= min_count)
@@ -580,12 +600,8 @@ def bpe_train(
         for c in picked:
             merges.append((len(merges), c["_l"], c["_r"], int(c["_c"])))
             rules.append((c["_l"], c["_r"]))
-        if len(rules) == 1:
-            folded = _bpe_merge_pair(F.col("_syms"), *rules[0])
-        else:
-            folded = _bpe_fold_rules(F.col("_syms"), _bpe_rules_lit(rules))
         vocab = vocab.withColumn(
-            "_syms", folded
+            "_syms", _bpe_fold_rules(F.col("_syms"), _bpe_rules_lit(rules))
         ).localCheckpoint(eager=False)
         trainable = vocab if min_count == 1 else vocab.filter(
             F.col("_n") >= min_count)
@@ -664,12 +680,7 @@ def bpe_apply(
         F.col(id_col).alias("_id"),
         F.explode_outer(tokenize(F.col(text_col), pattern)).alias("_w"),
     )
-    chars = F.split(F.col("_w"), "")
-    syms = F.concat(
-        F.slice(chars, 1, F.size(chars) - 1),
-        F.array(F.concat(F.element_at(chars, F.lit(-1)),
-                         F.lit(end_of_word))),
-    )
+    syms = _bpe_symbols(F.col("_w"), end_of_word)
     vocab = (
         toks.filter(F.col("_w").isNotNull())
         .select("_w")
@@ -694,14 +705,11 @@ def bpe_apply(
 
 def char_ngrams(text: Column, n: int = 5) -> Column:
     """Character n-grams (array<string>) of the normalized text. Empty
-    array when the text is shorter than ``n``."""
+    array when the text is NULL or shorter than ``n``."""
     def grams(norm: Column) -> Column:
-        count = F.greatest(F.length(norm) - F.lit(n - 1), F.lit(0))
-        return F.when(count == 0, F.array().cast("array<string>")).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), count),
-                lambda i: norm.substr(i, F.lit(n)),
-            )
+        return F.transform(
+            _window_starts(F.coalesce(F.length(norm), F.lit(0)), n),
+            lambda i: norm.substr(i, F.lit(n)),
         )
 
     # bind the normalized string once (else the regexp re-runs per gram)
@@ -778,40 +786,20 @@ def tfidf(
     document frequencies are two partially-aggregated groupBys; the
     tf⋈df join shuffles on ``token`` (vocabulary-sized, NOT corpus-sized
     — Zipf keeps it orders of magnitude below the token stream), and the
-    corpus size N rides in as a ONE-ROW broadcast equi join onto the
-    vocabulary-sized df table (r16; was an eager ``df.count()`` — a
-    BLOCKING sequential driver job per execution whose column-pruned
-    corpus pass now overlaps the main DAG instead of preceding it, and
-    the operator is lazy: zero jobs at call time, same discipline as
-    ``ngram_perplexity``'s V join). With ``top_k_per_doc`` a per-doc
+    corpus size N rides in as a ONE-ROW broadcast
+    (:func:`~yaetl_spark.operators.curation.attach_scalars`) onto the
+    vocabulary-sized df table, never the token stream: the operator is
+    lazy, zero jobs at call time. With ``top_k_per_doc`` a per-doc
     rank window keeps only the strongest terms — per-doc state,
     distributes freely.
     """
-    terms = df.select(
-        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("token")
-    )
-    tf = terms.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
-    # N as a 1-row relation broadcast onto the VOCABULARY-sized df table
-    # (never the token stream). The key is an always-0 expression derived
-    # from a real column on each side — a literal key would constant-fold
-    # to `1 = 1` and plan a BroadcastNestedLoopJoin (the tfidf plan gate
-    # rejects BNLJ); a non-foldable pmod keeps it an equi BHJ.
-    ndocs = df.agg(F.count(F.lit(1)).alias("_n")).select(
-        F.col("_n").cast("double").alias("_n"),
-        # pmod on the BIGINT count, cast the 0-valued result — casting
-        # the count itself to int first would CAST_OVERFLOW under an
-        # ANSI session once N exceeds 2^31-1 documents (inside the
-        # operator's declared envelope); pmod of a bigint is safe at
-        # any count and the result is always 0.
-        F.pmod(F.col("_n"), F.lit(1)).cast("int").alias("_one"),
-    )
-    dfreq = (
-        tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-        .withColumn(
-            "_one", F.pmod(F.coalesce(F.length("token"), F.lit(0)), F.lit(1))
-        )
-        .join(F.broadcast(ndocs), "_one")
-        .drop("_one")
+    from .curation import attach_scalars  # local: avoid import cycle
+
+    tf = _token_stream(df, text_col, id_col).groupBy(id_col, "token").agg(
+        F.count(F.lit(1)).alias("tf"))
+    ndocs = df.agg(F.count(F.lit(1)).cast("double").alias("_n"))
+    dfreq = attach_scalars(
+        tf.groupBy("token").agg(F.count(F.lit(1)).alias("df")), ndocs, "token"
     )
     scored = tf.join(dfreq, "token").select(
         F.col(id_col),
@@ -858,11 +846,8 @@ def inverted_index(
     they serialize to the driver or a sink. The flattened string form is
     deterministic (sorted, distinct) across engines and partitionings.
     """
-    terms = df.select(
-        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("token")
-    )
     idx = (
-        terms.groupBy("token")
+        _token_stream(df, text_col, id_col).groupBy("token")
         .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("_ids"))
         .select(
             "token",
@@ -895,8 +880,10 @@ def bm25_topk(
     over the corpus the call sees. Returns ``(id_col, bm25,
     n_terms_matched)`` ordered by ``(bm25 DESC, id ASC)`` — a total
     order, so the cut is deterministic. Per-term contributions are
-    rounded to 9 and summed as DECIMAL(20,9) (order-independent), the
-    final score rounded to 6 — bit-stable across engines.
+    rounded to 9 and summed exactly as DECIMAL
+    (:func:`~yaetl_spark.operators.stats._dsum`, order-independent), the
+    final score rounded to 6 — bit-stable across engines. A NULL text counts as a document
+    with no tokens: it adds to N but not to the length total.
 
     Scale shape (100 TB):
     - the token stream is filtered to the |query| terms BEFORE its
@@ -924,7 +911,7 @@ def bm25_topk(
     )
     totals = toks.agg(
         F.count(F.lit(1)).cast("double").alias("_n_docs"),
-        (F.sum(F.size("_t")).cast("double")
+        (F.sum(F.array_size("_t")).cast("double")
          / F.count(F.lit(1)).cast("double")).alias("_avgdl"),
     )
     # pinned (compute_once): the match table feeds BOTH the df-count leg
@@ -944,7 +931,7 @@ def bm25_topk(
     matches = compute_once(
         toks.select(
             F.col(id_col),
-            F.size("_t").cast("double").alias("_dl"),
+            F.array_size("_t").cast("double").alias("_dl"),
             F.explode("_t").alias("_term"),
         )
         .filter(F.col("_term").isin(terms))
@@ -968,12 +955,11 @@ def bm25_topk(
            * (1.0 - F.lit(float(b))
               + F.lit(float(b)) * F.col("_dl") / F.col("_avgdl")))
     )
-    contrib = F.round(idf * tf_part, 9).cast("decimal(20,9)")
     scored = (
         matches.join(F.broadcast(enriched), "_term")
         .groupBy(id_col)
         .agg(
-            F.round(F.sum(contrib).cast("double"), 6).alias("bm25"),
+            F.round(_dsum(idf * tf_part), 6).alias("bm25"),
             F.count(F.lit(1)).cast("bigint").alias("n_terms_matched"),
         )
     )
@@ -1066,10 +1052,7 @@ def vocab_stats(
 
     from .curation import attach_scalars  # local: avoid import cycle
 
-    toks = df.select(
-        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("token")
-    )
-    counts = toks.groupBy("token").agg(
+    counts = _token_stream(df, text_col, id_col).groupBy("token").agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct(F.col(id_col)).alias("df"),
     )
@@ -1113,26 +1096,22 @@ def token_entropy(
     so the whole thing is ONE (doc, token) count shuffle followed by
     one per-doc aggregate — no window, no second pass for ``n``. The
     ``c·log2 c`` terms ride the repo's absorb-the-ulps pattern
-    (9-decimal rounding + DECIMAL(38,9) accumulation) so the sum is
+    (9-decimal rounding + exact DECIMAL accumulation,
+    :func:`~yaetl_spark.operators.stats._dsum`) so the sum is
     independent of which partition sees which token — rerun- and
     oracle-stable. Per-doc state is one accumulator row, never the
     token list.
     """
-    dec = "decimal(38,9)"
-    toks = df.select(
-        F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("token")
-    )
-    tf = toks.groupBy(id_col, "token").agg(
+    tf = _token_stream(df, text_col, id_col).groupBy(id_col, "token").agg(
         F.count(F.lit(1)).alias("_c")
     )
     c = F.col("_c").cast("double")
-    term = F.round(c * F.log2(c), 9).cast(dec)
     return tf.groupBy(id_col).agg(
         F.sum("_c").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_unique"),
         F.round(
             F.log2(F.sum("_c").cast("double"))
-            - F.sum(term).cast("double") / F.sum("_c").cast("double"),
+            - _dsum(c * F.log2(c)) / F.sum("_c").cast("double"),
             round_to,
         ).alias("entropy"),
     )
@@ -1254,12 +1233,7 @@ def normalize_for_dedup(text: Column) -> Column:
     for exact-substring keys). Pure scan-level Column expression —
     compose with ``F.md5``/``F.xxhash64`` for the fingerprint.
     """
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(text), r"[^a-z]+", " "),
-            r"\s+", " ",
-        )
-    )
+    return normalize_ws(F.regexp_replace(F.lower(text), r"[^a-z]+", " "))
 
 
 def normalized_dedup(
